@@ -2,7 +2,8 @@ package graft.queries
 
 /** Build-event accounting for the session-memoized family caches
   * (dedup shingles, unigram/wordpiece training, KN-4 model tables, CT
-  * language-ID artifacts, contamination pairs, interval-overlap pairs).
+  * language-ID artifacts, contamination pairs, interval-overlap pairs,
+  * the q52 IVF index).
   *
   * Bench publishes min-of-attempts per query, which prices a family
   * cache's steady-state READ — the one-time build lands only in the

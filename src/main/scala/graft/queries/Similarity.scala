@@ -364,10 +364,11 @@ object Similarity {
       .start()
 
   /** One live index per (session, source dir, codebook size); rebuilt
-    * only when absent. Stopped-session entries are evicted on access
-    * (same bounded-cache discipline as Dedup's shingle frame); the temp
-    * directories live for the JVM (tmpdir hygiene, not executor
-    * storage).
+    * only when absent, and each build is a family-cache build
+    * ([[FamilyCaches.noteBuild]]), so Bench prices it in
+    * `cache_build_sec`. Stopped-session entries are evicted on access
+    * (same bounded-cache discipline as Dedup's shingle frame), and an
+    * evicted entry's temp directory is deleted with it.
     */
   private val indexCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), String]
@@ -382,9 +383,12 @@ object Similarity {
       nCentroids: Int = 8, nProbe: Int = 2): DataFrame = {
     import s.implicits._
     indexCache.keySet.foreach { k =>
-      if (k._1.sparkContext.isStopped) indexCache.remove(k)
+      if (k._1.sparkContext.isStopped) indexCache.remove(k).foreach { p =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+      }
     }
     val indexPath = indexCache.getOrElseUpdate((s, dir, nCentroids), {
+      FamilyCaches.noteBuild()
       val p = java.nio.file.Files.createTempDirectory("graft_ivf_index").toString
       writeIvfIndex(s, dir, p, nCentroids)
       p

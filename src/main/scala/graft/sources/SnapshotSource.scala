@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.QueryConstant
 import graft.model.Op
 
 /** Snapshot source (reference S2): a consistent chunked read of existing
@@ -38,13 +39,16 @@ object SnapshotSource {
       namespace: String = "public"): DataFrame =
     asSnapshotEvents(Tables.load(spark, dir, table), table, namespace)
 
-  /** Any relational frame → SNAPSHOT ChangeEvents (shared by the parquet
-    * and JDBC snapshot lanes): every column stringified into `newData`.
+  /** Any relational frame → SNAPSHOT ChangeEvents (shared by the parquet,
+    * JDBC and streaming snapshot lanes): every column stringified into
+    * `newData`. `eventTime` is the query's (or micro-batch's)
+    * `current_timestamp()`, kept out of the generated code's text so
+    * every snapshot query of one shape reuses one compiled stage.
     */
   def asSnapshotEvents(df: DataFrame, table: String, namespace: String): DataFrame = {
     val kvs = df.columns.toIndexedSeq.flatMap(c => Seq(lit(c), col(c).cast("string")))
     df.select(
-      current_timestamp().as("eventTime"),
+      QueryConstant.currentTimestamp.as("eventTime"),
       lit(namespace).as("tableNamespace"),
       lit(table).as("tableName"),
       lit(null).cast("map<string,string>").as("oldData"),

@@ -109,9 +109,15 @@ object CdcPipeline {
     * as fused codegen'd accumulator bumps instead of a CollectMetrics
     * node — the node alone cost ~50% of serializer-lane throughput
     * (SerBench isolate, sf0.1; even a bare `observe(count(1))` split
-    * the whole-stage-codegen span). The probe attaches PRE-handler so
-    * records the handler's filters silently drop surface as quality
-    * counters, and post-handler for the per-topic success counts.
+    * the whole-stage-codegen span). The probe itself costs less than
+    * perfbench's ablation can resolve (0.1 s, IQR 0.2 s, of a 1.9 s
+    * snapshot pass); the ~0.8 s once charged to it was a per-query
+    * recompile of the stage, caused by the snapshot's folded
+    * `eventTime` literal in the generated code (see
+    * [[graft.functions.QueryConstant]]).
+    * The probe attaches PRE-handler so records the handler's filters
+    * silently drop surface as quality counters, and post-handler for
+    * the per-topic success counts.
     */
   def defaultTransform(events: DataFrame, cfg: ConnectorConfig,
       probe: Option[PipelineProbe]): DataFrame = {
@@ -354,7 +360,8 @@ object CdcPipeline {
       return
     }
     // the snapshot race is the throughput-critical path: same fused
-    // probe as the CDC stream (the observe fallback costs ~46% there)
+    // probe as the CDC stream (the observe fallback costs ~42% of the
+    // throughput there — sf0.1 lineitem, 4 cores — the probe nothing)
     val records = defaultTransform(snap, cfg, probe)
     val writer = sink match {
       case "parquet" =>

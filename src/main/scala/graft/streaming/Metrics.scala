@@ -8,10 +8,14 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import scala.jdk.CollectionConverters._
 
+import graft.functions.QueryConstant
+
 /** Pipeline metrics (reference O17, `kafka/producer/metric.go:12-111`):
   *
   *   - process latency (event-time → produce):
-  *     `current_timestamp - eventTime` observed per micro-batch
+  *     `current_timestamp - eventTime` observed per micro-batch (the
+  *     stamp wrapped in [[QueryConstant]] so the observed aggregate's
+  *     projection compiles once per plan shape, not once per query)
   *   - success counters per topic
   *   - bulk-flush latency ≙ the micro-batch `batchDuration` Spark already
   *     reports in StreamingQueryProgress
@@ -34,7 +38,7 @@ object Metrics {
     events.observe(
       ObservationName,
       count(lit(1)).as("events"),
-      max(unix_millis(current_timestamp()) - unix_millis(col("eventTime")))
+      max(unix_millis(QueryConstant.currentTimestamp) - unix_millis(col("eventTime")))
         .as("max_process_latency_ms"),
       approx_count_distinct(concat_ws(".", col("tableNamespace"), col("tableName")))
         .as("approx_tables"))
@@ -84,7 +88,7 @@ object Metrics {
     events.observe(
       ObservationName,
       count(lit(1)).as("events"),
-      max(unix_millis(current_timestamp()) - unix_millis(col("eventTime")))
+      max(unix_millis(QueryConstant.currentTimestamp) - unix_millis(col("eventTime")))
         .as("max_process_latency_ms"),
       approx_count_distinct(concat_ws(".", col("tableNamespace"), col("tableName")))
         .as("approx_tables"),

@@ -89,7 +89,13 @@ final class PipelineProbe(
     * filter below a deterministic Project by SUBSTITUTING aliases into
     * the predicate, which re-built the row-image maps twice per row
     * (measured: the whole +1.3s observed on the first probe attempt was
-    * that duplicated `map(...)`; the probe call itself is free).
+    * that duplicated `map(...)`). The probe call itself is free: the
+    * ~0.8 s of a ~2.7 s snapshot pass that perfbench's prefix ablation
+    * still charged to it was a per-query RECOMPILE — the snapshot's
+    * folded `eventTime` literal was inlined into the generated
+    * `update(...)` call, so every query compiled its stage anew and ran
+    * on cold JIT code. [[graft.functions.QueryConstant]] keeps the
+    * stamp out of the source text.
     * Project-over-Project collapsing refuses to duplicate a
     * non-deterministic or multi-use non-cheap alias, so the maps stay
     * computed ONCE below and every downstream consumer reads the probed

@@ -43,6 +43,15 @@ class AnnRecallSpec extends SparkSpec {
       s"expected cid partition pruning in:\n$plan")
   }
 
+  test("q52's index build counts as a family-cache build, its reuse does not") {
+    // a codebook size no other test uses, so the first call misses
+    val b0 = FamilyCaches.buildCount
+    Similarity.q52AnnIvfIndexed(spark, dir, nCentroids = 5)
+    val b1 = FamilyCaches.buildCount
+    Similarity.q52AnnIvfIndexed(spark, dir, nCentroids = 5)
+    assert(b1 - b0 == 1 && FamilyCaches.buildCount == b1)
+  }
+
   test("SRP-LSH with full multi-probe (radius = nBits, one table) is exactly brute force") {
     val truth = pairSet(Similarity.q50AnnBrute(spark, dir))
     assert(truth.nonEmpty)

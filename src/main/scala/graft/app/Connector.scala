@@ -1,11 +1,14 @@
 package graft.app
 
-import java.util.concurrent.CountDownLatch
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener,
+  StreamingQueryProgress}
 
-import graft.streaming.CdcPipeline
+import scala.jdk.CollectionConverters._
+
+import graft.streaming.{CdcPipeline, PipelineProbe}
 
 /** Connector facade mirroring the reference API shape
   * (`/root/reference/connector.go:22-26`): construct with config, then
@@ -35,33 +38,35 @@ final class Connector(
   @volatile private var query: StreamingQuery = _
   @volatile private var listenerAdded = false
 
-  /** Metrics exposition (reference `README.md:270-299`): when
-    * `cfg.metricsPort` is set, the connector owns a registry, feeds it
-    * through a [[graft.streaming.Metrics.Collector]], and serves
-    * `/metrics` + `/status` over HTTP for the life of the connector.
-    * `/status` reports 200 while the streaming query is active (the
-    * reference pings PostgreSQL; the query's liveness is this lane's
-    * source-connectivity equivalent).
+  /** Metrics exposition (reference `README.md:270-299`): the connector
+    * owns a registry, feeds it from [[pipelineProbe]], and — when
+    * `cfg.metricsPort` is set — serves `/metrics` + `/status` over HTTP
+    * for the life of the connector. `/status` reports 200 while the
+    * streaming query is active (the reference pings PostgreSQL; the
+    * query's liveness is this lane's source-connectivity equivalent).
     */
   val metrics = new graft.streaming.MetricsRegistry(cfg.slotName)
   /** Fused O17 metrics probe: counters ride the serializer stage as
-    * codegen'd accumulator bumps (a CollectMetrics observe node halved
-    * serializer throughput — see [[graft.streaming.PipelineProbe]]);
-    * the collector drains per-batch deltas into the registry.
+    * codegen'd accumulator bumps (see [[graft.streaming.PipelineProbe]]);
+    * the connector's query-scoped listener drains per-batch deltas into
+    * the registry.
     */
-  val pipelineProbe = new graft.streaming.PipelineProbe(
+  val pipelineProbe = new PipelineProbe(
     spark.sparkContext,
     graft.route.TopicRouter(cfg.kafka.tableTopicMapping),
     cfg.keyField, s"graft.${cfg.slotName}")
-  private val metricsCollector =
-    new graft.streaming.Metrics.Collector(Some(metrics), Some(pipelineProbe))
+  private val batches = new ConcurrentLinkedQueue[PipelineProbe.BatchMetrics]()
 
   /** Per-batch pipeline metrics collected so far (events, latency,
     * batch duration) — the listener-facing read surface.
     */
-  def batchMetrics: Seq[graft.streaming.Metrics.BatchMetrics] = metricsCollector.snapshot
+  def batchMetrics: Seq[PipelineProbe.BatchMetrics] = batches.asScala.toSeq
   /** Total events processed (pre-handler count, all ops). */
-  def totalProcessedEvents: Long = metricsCollector.totalEvents
+  def totalProcessedEvents: Long = batchMetrics.map(_.events).sum
+
+  private def drainProbe(p: StreamingQueryProgress): Unit =
+    pipelineProbe.drainInto(metrics, p.batchId, p.batchDuration).foreach(batches.add)
+
   @volatile private var metricsServer: graft.streaming.MetricsServer = _
 
   // live replication lane (source.format = graft-replication): the
@@ -133,7 +138,10 @@ final class Connector(
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       // the listener is session-global: only OUR query's progress counts
       val q = query
-      if (q != null && e.progress.id == q.id) ready.countDown()
+      if (q != null && e.progress.id == q.id) {
+        drainProbe(e.progress)
+        ready.countDown()
+      }
     }
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
@@ -160,14 +168,16 @@ final class Connector(
     val mode = if (snap.enabled) snap.mode else SnapshotConfig.ModeNever
 
     if (mode == SnapshotConfig.ModeSnapshotOnly) {
-      CdcPipeline.runSnapshotPhase(spark, cfg, sink, parquetOutDir, Some(metrics),
+      val done = CdcPipeline.runSnapshotPhase(spark, cfg, sink, parquetOutDir, Some(metrics),
         Some(pipelineProbe))
+      // no listener drains the bounded run; its accumulators are final
+      // once it has terminated, so one drain here is exact
+      Option(done.lastProgress).foreach(drainProbe)
       ready.countDown() // no CDC to wait for (connector.go:88-89)
       return null
     }
     if (!listenerAdded) {
       spark.streams.addListener(listener)
-      spark.streams.addListener(metricsCollector)
       listenerAdded = true
     }
     cfg.metricsPort.foreach { p =>
@@ -215,10 +225,14 @@ final class Connector(
     if (slotChecker != null) { slotChecker.close(); slotChecker = null }
     if (replicationTail != null) replicationTail.stop()
     if (tailThread != null) { tailThread.join(5000L); tailThread = null }
-    if (query != null) query.stop()
+    if (query != null) {
+      query.stop()
+      // the last batch's progress event may still be queued on the
+      // listener bus; drains only move deltas, so a racing one is harmless
+      Option(query.lastProgress).foreach(drainProbe)
+    }
     if (listenerAdded) {
       spark.streams.removeListener(listener)
-      spark.streams.removeListener(metricsCollector)
       listenerAdded = false
     }
     if (metricsServer != null) { metricsServer.close(); metricsServer = null }

@@ -1242,8 +1242,7 @@ object Dedup {
     snmStages(s, dir, w, parts)._4
 
   /** The q148 pipeline with its stage frames exposed (rank / candidates
-    * / filtered / verified) — the derived-decade adjudication probes
-    * time each stage in isolation (tools/SnmProbe).
+    * / filtered / verified), so each stage can be timed in isolation.
     */
   private[graft] def snmStages(s: SparkSession, dir: String,
       w: Int = 10, parts: Int = 32): (DataFrame, DataFrame, DataFrame, DataFrame) = {

@@ -1668,10 +1668,10 @@ object TextOps {
     * a real eval set is tiny (runtime-sized broadcast), but FORCING
     * the hint would OOM/degrade when the eval frame grows with the
     * corpus (the registered %-50 contract ties eval size to corpus
-    * size, so the derived decade grows it 10×). `evalCap` exists for
-    * the deployment-shaped decade probe (tools/ContamProbe): capped
-    * (fixed eval) ≈ uncapped at sf1d post-fix — the lanes are
-    * corpus-scan-bound, the honest linear term.
+    * size, so the derived decade grows it 10×). `evalCap` fixes the
+    * eval set (the deployment shape: the corpus grows, the benchmark
+    * suite does not). Measured at sf1d post-fix, capped ≈ uncapped —
+    * the lanes are corpus-scan-bound, the honest linear term.
     */
   private[queries] def contaminationPairs(s: SparkSession, loaded: DataFrame,
       evalCap: Long = Long.MaxValue): DataFrame = {

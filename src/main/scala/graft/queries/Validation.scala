@@ -129,7 +129,7 @@ object Validation {
     // per-column aggregates reads ONE parquet column per branch
     // (column pruning per scan), partial-aggregates the distinct
     // values map-side, and rolls each branch up to one row —
-    // interleaved A/B probe (tools/Q137Probe): 4.7 s → 1.4 s at sf0.1
+    // an interleaved A/B measured 4.7 s → 1.4 s at sf0.1
     // with identical output. n_rows = Σ group counts, n_null = the
     // null group's count, n_distinct = non-null group count — exact
     // integers, oracle unchanged.

@@ -99,37 +99,21 @@ object CdcPipeline {
     }
 
   /** Normalize + route + default-handle: ChangeEvent stream → Kafka sink
-    * contract (topic/key/value/headers), with per-batch observed metrics
-    * (O17) riding the plan.
-    */
-  def defaultTransform(events: DataFrame, cfg: ConnectorConfig): DataFrame =
-    defaultTransform(events, cfg, None)
-
-  /** As above; when a [[PipelineProbe]] is supplied the O17 metrics ride
-    * as fused codegen'd accumulator bumps instead of a CollectMetrics
-    * node — the node alone cost ~50% of serializer-lane throughput
-    * (SerBench isolate, sf0.1; even a bare `observe(count(1))` split
-    * the whole-stage-codegen span). The probe itself costs less than
-    * perfbench's ablation can resolve (0.1 s, IQR 0.2 s, of a 1.9 s
-    * snapshot pass); the ~0.8 s once charged to it was a per-query
-    * recompile of the stage, caused by the snapshot's folded
-    * `eventTime` literal in the generated code (see
-    * [[graft.functions.QueryConstant]]).
-    * The probe attaches PRE-handler so records the handler's filters
-    * silently drop surface as quality counters, and post-handler for
-    * the per-topic success counts.
+    * contract (topic/key/value/headers). With a [[PipelineProbe]] the O17
+    * metrics ride as fused codegen'd accumulator bumps: it attaches
+    * PRE-handler, so records the handler's filters silently drop surface
+    * as quality counters, and post-handler for the per-topic success
+    * counts. The probe costs less than perfbench's ablation can resolve
+    * (0.1 s, IQR 0.2 s, of a 1.9 s snapshot pass); the ~0.8 s once
+    * charged to it was a per-query recompile of the stage, caused by the
+    * snapshot's folded `eventTime` literal in the generated code (see
+    * [[graft.functions.QueryConstant]]). `None` is the uninstrumented
+    * transform.
     */
   def defaultTransform(events: DataFrame, cfg: ConnectorConfig,
-      probe: Option[PipelineProbe]): DataFrame = {
+      probe: Option[PipelineProbe] = None): DataFrame = {
     val router = TopicRouter(cfg.kafka.tableTopicMapping)
-    val watched = probe match {
-      case Some(pr) => pr.attach(events)
-      // observe fallback: ONE pre-handler CollectMetrics node carrying
-      // pipeline metrics AND quality counters (not two — each node
-      // costs ~2µs/row of stage-break overhead regardless of its
-      // expressions)
-      case None => Metrics.observedAll(events, router, cfg.keyField)
-    }
+    val watched = probe.fold(events)(_.attach(events))
     val records = cfg.serializer match {
       case graft.app.ConnectorConfig.SerializerDebezium =>
         // envelope lane emits string key/value; the sink contract (and
@@ -144,11 +128,7 @@ object CdcPipeline {
           keepEventTime = false, emitTruncates = cfg.emitTruncates)
     }
     val placed = withPlacement(records, cfg)
-    probe match {
-      case Some(pr) => pr.attachSink(placed)
-      case None =>
-        Metrics.observedSink(placed, cfg.kafka.tableTopicMapping.values.toSeq)
-    }
+    probe.fold(placed)(_.attachSink(placed))
   }
 
   /** Client-side balancer placement (reference `config.go:48-51`):
@@ -189,14 +169,12 @@ object CdcPipeline {
     * extra columns). One extra exchange per micro-batch — the price of
     * the ordering guarantee. For strict broker-side ordering under
     * producer retries, pair with `kafka.enable.idempotence=true`
-    * (else a retried batch can overtake an in-flight one).
+    * (else a retried batch can overtake an in-flight one). The probe
+    * attaches as in [[defaultTransform]].
     */
   def orderedTransform(events: DataFrame, cfg: ConnectorConfig,
       probe: Option[PipelineProbe] = None): DataFrame = {
-    val watched = probe match {
-      case Some(pr) => pr.attach(events)
-      case None => Metrics.observed(events)
-    }
+    val watched = probe.fold(events)(_.attach(events))
     val placed = withPlacement(
       Handlers.declarative(watched,
           TopicRouter(cfg.kafka.tableTopicMapping), cfg.keyField, keepEventTime = true)
@@ -204,11 +182,7 @@ object CdcPipeline {
         .sortWithinPartitions(col("key"), col("eventTime"))
         .drop("eventTime"), // narrow projection: keeps the sort, drops the column
       cfg)
-    probe match {
-      case Some(pr) => pr.attachSink(placed)
-      case None =>
-        Metrics.observedSink(placed, cfg.kafka.tableTopicMapping.values.toSeq)
-    }
+    probe.fold(placed)(_.attachSink(placed))
   }
 
   /** Production sink: Spark's Kafka writer with the reference's producer
@@ -299,11 +273,12 @@ object CdcPipeline {
     * `_spark_metadata` exactly-once file log stays consistent, which a
     * bare batch append into a streaming sink directory would corrupt
     * (batch-written files are invisible to readers of a file-sink dir).
+    * Returns the finished bounded query.
     */
   def runSnapshotPhase(
       spark: SparkSession, cfg: ConnectorConfig, sink: String, outDir: String,
       registry: Option[MetricsRegistry] = None,
-      probe: Option[PipelineProbe] = None): Unit = {
+      probe: Option[PipelineProbe] = None): StreamingQuery = {
     val snap = snapshotEventStream(spark, cfg).getOrElse(
       throw new IllegalArgumentException("snapshot mode requires snapshot.tables"))
     val ckpt = s"${cfg.checkpointDir}/snapshot"
@@ -347,8 +322,8 @@ object CdcPipeline {
   private def runSnapshotPhaseInner(
       spark: SparkSession, cfg: ConnectorConfig, sink: String, outDir: String,
       snap: DataFrame, ckpt: String,
-      onStart: org.apache.spark.sql.streaming.StreamingQuery => Unit,
-      probe: Option[PipelineProbe]): Unit = {
+      onStart: StreamingQuery => Unit,
+      probe: Option[PipelineProbe]): StreamingQuery = {
     if (sink == "replica") {
       // the replica sink consumes raw ChangeEvents (its merge IS the
       // handler); SNAPSHOT ops upsert like inserts
@@ -357,11 +332,10 @@ object CdcPipeline {
       onStart(q)
       // AvailableNow semantics: drain what the bounded snapshot source has
       q.processAllAvailable(); q.stop()
-      return
+      return q
     }
     // the snapshot race is the throughput-critical path: same fused
-    // probe as the CDC stream (the observe fallback costs ~42% of the
-    // throughput there — sf0.1 lineitem, 4 cores — the probe nothing)
+    // probe as the CDC stream
     val records = defaultTransform(snap, cfg, probe)
     val writer = sink match {
       case "parquet" =>
@@ -376,5 +350,6 @@ object CdcPipeline {
     val q = writer.trigger(Trigger.AvailableNow()).start()
     onStart(q)
     q.awaitTermination() // bounded: returns when the table scan is drained
+    q
   }
 }

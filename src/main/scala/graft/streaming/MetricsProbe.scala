@@ -22,14 +22,14 @@ import graft.route.TopicRouter
   * Why: `Dataset.observe`'s CollectMetricsExec does not participate in
   * whole-stage codegen, so ONE observe call splits the serializer
   * pipeline into two codegen stages and evaluates its aggregate
-  * expressions interpreted per row. SerBench isolate (sf0.1, 600k
-  * rows): envelope 1.94s → envelope+observe 3.88s, and a bare
-  * `observe(count(1))` alone costs 3.27s — the node itself, not the
-  * metric expressions, is the overhead. The reference's metrics are
-  * plain counter increments and must be ~free.
+  * expressions interpreted per row. Measured on the envelope lane
+  * (sf0.1, 600k rows): envelope 1.94s → envelope+observe 3.88s, and a
+  * bare `observe(count(1))` alone costs 3.27s — the node itself, not
+  * the metric expressions, is the overhead. The reference's metrics
+  * are plain counter increments and must be ~free.
   *
-  * This probe is a native boolean [[Expression]] that always returns
-  * true, attached as a `filter` (never pushed/eliminated: it declares
+  * This probe is a native pass-through [[Expression]] attached as a
+  * projection (see [[attach]]; never folded or eliminated: it declares
   * itself non-deterministic). Its generated code is one static-shaped
   * call per row into [[PipelineProbe.update]], which bumps per-task
   * Spark accumulator copies — plain field increments, merged to the
@@ -39,10 +39,11 @@ import graft.route.TopicRouter
   * task-completion accumulator merges, no extra pass, no shuffle, no
   * stage break.
   *
-  * Delivery: [[Metrics.Collector]] drains per-batch DELTAS from the
-  * driver-side accumulators at each StreamingQueryProgress and feeds
-  * the [[MetricsRegistry]] — same metric families as the observe lane
-  * (events, process latency, quality violations, per-topic successes).
+  * Delivery: the owning [[graft.app.Connector]]'s query-scoped
+  * listener calls [[drainInto]] at each of its query's
+  * StreamingQueryProgress events, which moves the per-batch DELTAS of
+  * the driver-side accumulators into the [[MetricsRegistry]] (events,
+  * process latency, quality violations, per-topic successes).
   *
   * Counter semantics — AT-LEAST-ONCE, inflate-never-lose (pinned by
   * MetricsSpec's retry-injection test): updates from FAILED task
@@ -69,7 +70,6 @@ final class PipelineProbe(
   val unroutableTable = new LongAccumulator
   val nullKey = new LongAccumulator
   val latency = new LatestLatencyAccumulator
-  val tables = new TableSetAccumulator
   val topics = new TopicCountAccumulator
 
   locally {
@@ -78,12 +78,10 @@ final class PipelineProbe(
     sc.register(unroutableTable, s"$name.quality.unroutable_table")
     sc.register(nullKey, s"$name.quality.null_key")
     sc.register(latency, s"$name.process_latency")
-    sc.register(tables, s"$name.tables_seen")
     sc.register(topics, s"$name.topic_writes")
   }
 
-  /** Attach the pre-handler probe (events + quality + latency + table
-    * census — the [[Metrics.observedAll]] metric set) to a
+  /** Attach the pre-handler probe (events + quality + latency) to a
     * ChangeEvent-schema frame. The probe rides as a PASS-THROUGH
     * projection wrapping `op` — not a filter: the optimizer pushes any
     * filter below a deterministic Project by SUBSTITUTING aliases into
@@ -108,9 +106,9 @@ final class PipelineProbe(
       PipelineProbe.column(PipelineProbeExpr(children, this)))
   }
 
-  /** Attach the post-handler per-topic success counter (the
-    * [[Metrics.observedSink]] metric set) to a sink-contract frame —
-    * the same pass-through-projection shape, wrapping `topic`.
+  /** Attach the post-handler per-topic success counter to a
+    * sink-contract frame — the same pass-through-projection shape,
+    * wrapping `topic`.
     */
   def attachSink(records: DataFrame): DataFrame =
     records.withColumn("topic", PipelineProbe.column(
@@ -150,15 +148,12 @@ final class PipelineProbe(
     var byName = routeCache.get(ns)
     var hit = if (byName == null) null else byName.get(nm)
     if (hit == null) {
-      val nsS = ns.toString
-      val nmS = nm.toString
-      hit = java.lang.Boolean.valueOf(router.resolve(nsS, nmS).isDefined)
+      hit = java.lang.Boolean.valueOf(router.resolve(ns.toString, nm.toString).isDefined)
       if (byName == null) {
         byName = new java.util.HashMap[UTF8String, java.lang.Boolean]
         routeCache.put(ns.clone(), byName)
       }
       byName.put(nm.clone(), hit)
-      tables.add(nsS + "." + nmS)
     }
     cacheNs = ns.clone(); cacheName = nm.clone(); cacheRoutable = hit.booleanValue()
     cacheRoutable
@@ -236,7 +231,27 @@ final class PipelineProbe(
       .map { case (t, n) => t -> (n - prev.getOrElse(t, 0L)) }
       .filter(_._2 > 0L).toMap
     lastTopicCounts = tc
-    PipelineProbe.Deltas(e, uo, ut, nk, latAdvanced, lat, tables.value.size(), td)
+    PipelineProbe.Deltas(e, uo, ut, nk, latAdvanced, lat, td)
+  }
+
+  /** [[drain]] into `registry`: the process-latency gauge (when a row
+    * arrived), the bulk-request gauge (`batchDurationMs`), the quality
+    * violations and the per-topic successes. Returns the batch's
+    * metrics when it carried events.
+    */
+  def drainInto(registry: MetricsRegistry, batchId: Long,
+      batchDurationMs: Long): Option[PipelineProbe.BatchMetrics] = {
+    val d = drain()
+    if (d.latencyAdvanced) registry.setProcessLatency(d.latencyMs)
+    registry.setBulkRequestLatency(batchDurationMs)
+    if (d.unknownOp > 0) registry.incrementQualityViolation("unknown_op", d.unknownOp)
+    if (d.unroutableTable > 0)
+      registry.incrementQualityViolation("unroutable_table", d.unroutableTable)
+    if (d.nullKey > 0) registry.incrementQualityViolation("null_key", d.nullKey)
+    d.topicDeltas.foreach { case (t, n) => registry.incrementSuccess(t, n) }
+    if (d.events == 0) None
+    else Some(PipelineProbe.BatchMetrics(batchId, d.events,
+      if (d.latencyAdvanced) d.latencyMs else 0L, batchDurationMs))
   }
 }
 
@@ -248,8 +263,16 @@ object PipelineProbe {
       nullKey: Long,
       latencyAdvanced: Boolean,
       latencyMs: Long,
-      tablesSeen: Int,
       topicDeltas: Map[String, Long])
+
+  /** One drained micro-batch (≙ the reference's `ResponseHandler.OnSuccess`
+    * accounting plus its latency gauges).
+    */
+  final case class BatchMetrics(
+      batchId: Long,
+      events: Long,
+      maxProcessLatencyMs: Long,
+      batchDurationMs: Long)
 
   private[streaming] def column(e: Expression): Column =
     org.apache.spark.sql.graft.PlanShim.column(e)
@@ -305,29 +328,6 @@ final class LatestLatencyAccumulator
       }
     }
   override def value: (Long, Long, Long) = synchronized((obs, stamp, latencyMs))
-}
-
-/** Distinct "namespace.table" census — exact, bounded by the source's
-  * table count (config-scale, not data-scale).
-  */
-final class TableSetAccumulator extends AccumulatorV2[String, java.util.Set[String]] {
-  private val set: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  override def isZero: Boolean = set.isEmpty
-  override def copy(): TableSetAccumulator = {
-    val c = new TableSetAccumulator; c.set.addAll(set); c
-  }
-  override def reset(): Unit = set.clear()
-  override def add(v: String): Unit = set.add(v)
-  override def merge(other: AccumulatorV2[String, java.util.Set[String]]): Unit =
-    other match {
-      case o: TableSetAccumulator => set.addAll(o.set)
-      case _ => throw new UnsupportedOperationException(
-        s"cannot merge ${other.getClass.getName}")
-    }
-  override def value: java.util.Set[String] = {
-    val snap = new java.util.HashSet[String](); snap.addAll(set); snap
-  }
 }
 
 /** Per-topic success counts. The hot path caches the last topic's

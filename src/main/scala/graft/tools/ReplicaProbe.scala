@@ -13,10 +13,9 @@ import graft.model.Op
   * two collects): the q64 replica replay driven through the OLD
   * implementation (copied verbatim below, horizon machinery inlined)
   * and the CURRENT `Materialize.applyBatch`, alternating reps in ONE
-  * session so host drift cannot masquerade as a win (the r16 probe
-  * discipline — Q137Probe/Q212Probe). Prints wall seconds AND Spark
-  * job counts per replay; a row-equality audit of the final replica
-  * closes each rep. Tools-only: not referenced by any query path.
+  * session so host drift cannot masquerade as a win. Prints wall
+  * seconds AND Spark job counts per replay; a row-equality audit of
+  * the final replica closes each rep. Tools-only: not referenced by any query path.
   */
 object ReplicaProbe {
 

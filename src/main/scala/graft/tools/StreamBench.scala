@@ -175,8 +175,8 @@ object StreamBench {
         rows => paceFB(rows,
           df => graft.queries.LangModel.kn4ScoreBatch(kn4Model, df)),
         quadgrams(narrow), kn4ModelRows))
-    // interleaved attempts (the SerBench isolate discipline): run-order
-    // and co-located-load drift hit every lane equally; publish min/all
+    // interleaved attempts: run-order and co-located-load drift hit
+    // every lane equally; publish min/all
     val attempts = 2
     val samples = scala.collection.mutable.Map.empty[String, Vector[(Double, Int)]]
       .withDefaultValue(Vector.empty)

@@ -411,7 +411,7 @@ class PlanAuditSpec extends SparkSpec {
     // r16 shape: the ×12 multi-distinct Expand is gone; each of the 11
     // union branches reads exactly its own parquet column (column
     // pruning per scan) into a value-keyed partial-distinct aggregate
-    // (Q137Probe adjudicated ~3.4× at sf0.1 with identical rows)
+    // (an interleaved A/B measured ~3.4× at sf0.1 with identical rows)
     val p = plan("q137_profile").split("== Initial Plan ==")(0)
     assert(!p.contains("Expand"), s"the multi-distinct Expand must be gone:\n$p")
     val scanLines = p.split("\n").filter(_.contains("FileScan parquet"))

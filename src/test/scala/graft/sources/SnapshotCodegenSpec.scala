@@ -54,7 +54,9 @@ class SnapshotCodegenSpec extends SparkSpec {
     "flat serializer without a probe" -> (() =>
       CdcPipeline.defaultTransform(events, cfg(ConnectorConfig.SerializerDefault))),
     "Debezium envelope" -> (() =>
-      CdcPipeline.defaultTransform(events, cfg(ConnectorConfig.SerializerDebezium))))
+      CdcPipeline.defaultTransform(events, cfg(ConnectorConfig.SerializerDebezium))),
+    "Debezium envelope with a probe" -> (() => CdcPipeline.defaultTransform(events,
+      cfg(ConnectorConfig.SerializerDebezium), Some(probe))))
 
   private def stageSources(df: DataFrame): Seq[String] =
     df.queryExecution.executedPlan.collect {

@@ -130,6 +130,10 @@ class CdcStreamingSpec extends SparkSpec {
     assert(q == null) // snapshot-only returns after the bounded run
     conn.waitUntilReady() // ready signaled immediately, must not hang
     assert(ops(out) == Map("SNAPSHOT" -> 25L)) // nation has 25 rows
+    // no streaming query means no progress listener: the bounded run's
+    // probe counters are drained once it returns
+    assert(conn.metrics.successCount("nation-topic") == 25)
+    assert(conn.totalProcessedEvents == 25)
     conn.close()
   }
 

@@ -6,6 +6,7 @@ import graft.SparkSpec
 import graft.app.{Connector, ConnectorConfig, KafkaSinkConfig}
 
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** Pipeline metrics (O17) through the fused accumulator probe — the
   * production path since the CollectMetrics observe node was measured
@@ -88,6 +89,75 @@ class MetricsSpec extends SparkSpec {
     // is dropped by default (emitTruncates off) — so exactly 3 reach
     // the sink-side topic counter (2 clean + the null-key one)
     assert(conn.metrics.successCount("t") == 3)
+  }
+
+  test("another streaming query in the session leaves the connector's metrics alone") {
+    // Progress listeners are session-global. The connector drains its
+    // probe only on its own query's progress, so an unrelated query's
+    // progress must neither overwrite the bulk-latency gauge nor add
+    // to the batch list.
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.sql.{Dataset, Row}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val src = Files.createTempDirectory("graft-ssrc")
+    val chk = Files.createTempDirectory("graft-schk")
+    val out = Files.createTempDirectory("graft-sout")
+    val other = Files.createTempDirectory("graft-sother")
+    val lines = (0 until 7).map { i =>
+      s"""{"eventTime":"2024-01-01T00:00:00.000Z","tableNamespace":"public","tableName":"users","oldData":null,"newData":{"id":"$i"},"op":"INSERT"}"""
+    }
+    Files.write(src.resolve("b.json"), String.join("\n", lines: _*).getBytes)
+    Files.write(other.resolve("o.json"), "{\"x\":1}\n{\"x\":2}".getBytes)
+
+    val conn = new Connector(spark,
+      ConnectorConfig(
+        sourceDir = src.toString, checkpointDir = chk.toString,
+        kafka = KafkaSinkConfig(Seq("unused:9092"),
+          tableTopicMapping = Map("public.users" -> "t"),
+          producerBatchTickerDuration = 250.millis)),
+      sink = "parquet", parquetOutDir = out.toString)
+    val q = conn.start()
+    val deadline = System.currentTimeMillis() + 60000
+    while (conn.totalProcessedEvents < 7 && System.currentTimeMillis() < deadline)
+      Thread.sleep(200)
+    assert(conn.totalProcessedEvents == 7)
+    val before = conn.batchMetrics
+
+    def bulkGauge: Long = conn.metrics.render.linesIterator
+      .find(_.startsWith("graft_cdc_bulk_request_process_latency_current"))
+      .map(_.split(' ').last.toDouble.toLong).get
+    // the gauge the connector's own progress last set; the watcher is
+    // registered after the connector's listener, so it sees each event
+    // after the connector has handled it
+    val expected = new AtomicLong(-1L)
+    val seen = new ConcurrentLinkedQueue[(Long, Long)]() // (gauge, expected)
+    val watcher = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.id == q.id) expected.set(e.progress.batchDuration)
+        else seen.add((bulkGauge, expected.get))
+    }
+    spark.streams.addListener(watcher)
+    expected.compareAndSet(-1L, bulkGauge)
+    try {
+      // a slow batch gives the unrelated query a distinctive duration
+      val unrelated = spark.readStream.schema("x INT").json(other.toString).writeStream
+        .foreachBatch { (_: Dataset[Row], _: Long) => Thread.sleep(800L) }
+        .start()
+      val waitUntil = System.currentTimeMillis() + 60000
+      while (seen.isEmpty && System.currentTimeMillis() < waitUntil) Thread.sleep(100)
+      unrelated.stop()
+      assert(!seen.isEmpty, "the unrelated query's progress never arrived")
+      seen.asScala.foreach { case (gauge, want) =>
+        assert(gauge == want, s"bulk-latency gauge $gauge ms, the connector's batch took $want ms")
+      }
+      assert(conn.batchMetrics == before)
+    } finally {
+      spark.streams.removeListener(watcher)
+      conn.close()
+    }
   }
 
   test("probe counters under a task retry: failed-attempt updates dropped, nothing lost") {

@@ -23,8 +23,8 @@ object Bench {
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     // warm-up: JIT + noop-writer + parquet-footer caches over EVERY
-    // table, so the first measured query (q10, alphabetically) isn't
-    // charged session start-up or first-scan costs — measured variance
+    // table, so the first measured query isn't charged session
+    // start-up or first-scan costs — measured variance
     // on the leading queries dominated run-to-run noise before this
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { t =>
@@ -42,52 +42,16 @@ object Bench {
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     // Persistent-storage hygiene between queries: eager localCheckpoints
     // (connected components' per-round frames, the replica lane's
-    // per-batch merges, q43's assignment frame, q62's survivor frame)
+    // per-batch merges, ANN assignment and curation survivor frames)
     // stay in the block manager until the driver's ContextCleaner
     // happens to GC them — which within one bench run is "never", so
     // they accrete as executor-heap pressure that the min-of-two
     // discipline cannot cancel (both attempts of a LATER query pay the
-    // same GC debt). Sweep each query's new persistent RDDs once its
-    // attempts finish. The dedup family's shared shingle/pair caches
-    // are the deliberate exception: they persist ACROSS a family
-    // segment (built at q126 — alphabetically first since round 7 —
-    // and reused through q45, with the unigram-LM training
-    // checkpoints shared by q250/q251/q254/q259 riding the same
-    // segment — EVERY trainCache consumer must be listed here, or a
-    // SPARK_GRAFT_ONLY subset where it is the first consumer would
-    // sweep the freshly-trained checkpoint RDDs the cache still
-    // references, and the next consumer would read unpersisted
-    // lineage-truncated frames; rebuilt at q72
-    // for q72/q75; rebuilt at q94 for q94/q98), so family members
-    // skip the per-query sweep entirely and each segment END (q45,
-    // q75, q98) drops the shared frames via clearCaches (Dedup +
-    // LangModel), then sweeps EVERYTHING
-    // created since the segment's first member — which also reclaims
-    // mid-family members' own localCheckpoints (e.g. q72's BFS
-    // frontier/visited frames) that their own turn skipped.
-    // r16 additions: the CT language-ID artifacts (profile + per-doc
-    // rank profile — TextOps.ctCache, consumers q252/q253/q259) and the
-    // seven KN-4 model tables (LangModel.kn4Cache, consumers q290/q291/
-    // q295) ride the same session-cache discipline — each family's
-    // first consumer's FIRST attempt pays the build (min-of-two prices
-    // the steady-state read; QBENCH_r16's cold column carries the build
-    // cost, stated in OPTIMIZATION_r16.md)
-    val cacheSharers = Set("q126_prefix_join", "q135_containment",
-      "q138_source_overlap", "q148_snm",
-      "q198_interval_join", "q203_assortativity", "q215_kcore",
-      "q250_unigram_train",
-      "q251_unigram_encode", "q252_ct_profiles", "q253_ct_confusion",
-      "q254_unigram_nbest",
-      "q255_wordpiece_train", "q256_wordpiece_encode",
-      "q259_fertility_by_lang",
-      "q278_bleu_contamination", "q279_chrf_contamination",
-      "q290_kneser_ney_4gram_pruned", "q291_kn4_model_export",
-      "q295_kn4_model_serve",
-      "q40_ngram_jaccard", "q41_minhash_lsh",
-      "q42_simhash", "q45_dup_clusters", "q72_bfs_depth", "q75_edit_distance",
-      "q94_triangles", "q98_best_keeper")
-    val familyEnds = Set("q45_dup_clusters", "q75_edit_distance", "q98_best_keeper")
-    var familyStartIds: Option[Set[Int]] = None
+    // same GC debt). After each query's attempts, FamilyCaches.sweep
+    // unpersists every persistent RDD the query created that no shared
+    // artifact owns; the artifacts (shingles, pair tables, trained
+    // models, replay indexes) live until the run ends, so any subset
+    // or order of queries builds each one once.
     // Opt-in subset for derived-scale sweeps (BENCH_SCALING's third
     // point runs only the selected lanes); the driver never sets it,
     // so the per-round contract is unchanged. The CDC race lanes are
@@ -95,7 +59,6 @@ object Bench {
     // scaling points, not a headline-throughput rerun.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val initialIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
     // One-time family-cache builds (shingles, unigram/wordpiece/KN-4
     // training, CT artifacts, contamination/interval pair tables) land
     // in the building attempt only; min-of-attempts would price the
@@ -106,12 +69,11 @@ object Bench {
     // headline is a cold-suite number (r16 verdict item 2). The
     // attempts map still carries the raw numbers unchanged.
     var cacheBuildSec = 0.0
+    val runBuilds0 = graft.queries.FamilyCaches.buildCount
     val results = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .sortBy(_._1).map { case (name, fn) =>
       val preIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      if (cacheSharers.contains(name) && familyStartIds.isEmpty)
-        familyStartIds = Some(preIds)
       val attempts = scala.collection.mutable.ArrayBuffer.empty[Double]
       val builtInAttempt = scala.collection.mutable.ArrayBuffer.empty[Boolean]
       def attempt(): Boolean = {
@@ -138,36 +100,12 @@ object Bench {
         case i if builtInAttempt(i) && attempts(i) > 0 =>
           math.max(0.0, attempts(i) - sec)
       }.sum
-      if (familyEnds.contains(name)) {
-        graft.queries.Dedup.clearCaches(spark)
-        graft.queries.LangModel.clearCaches(spark)
-        graft.queries.TextOps.clearCaches(spark)
-        graft.queries.Timeseries.clearCaches(spark)
-        val base = familyStartIds.getOrElse(preIds)
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!base.contains(id)) rdd.unpersist(blocking = false)
-        }
-        familyStartIds = None
-      } else if (!cacheSharers.contains(name)) {
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!preIds.contains(id)) rdd.unpersist(blocking = false)
-        }
-      }
+      graft.queries.FamilyCaches.sweep(spark, preIds)
       (name, sec, attempts.toSeq)
     }
-    // A subset run (SPARK_GRAFT_ONLY) may include a cacheSharer without
-    // its familyEnd, so the per-family sweep above never fires; drop
-    // the shared frames here so a multi-scale sweep in one JVM doesn't
-    // carry one scale's pinned shingle/scratch frames into the next.
-    if (only.isDefined) {
-      graft.queries.Dedup.clearCaches(spark)
-      graft.queries.LangModel.clearCaches(spark)
-      graft.queries.TextOps.clearCaches(spark)
-      graft.queries.Timeseries.clearCaches(spark)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!initialIds.contains(id)) rdd.unpersist(blocking = false)
-      }
-    }
+    // every artifact is built once per run, whatever the query subset
+    val cacheBuilds = graft.queries.FamilyCaches.buildCount - runBuilds0
+    graft.queries.FamilyCaches.clear(spark)
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val attemptsJson = results.map { case (k, _, as) =>
@@ -271,7 +209,7 @@ object Bench {
     val fullJson =
       s"""{"metric":"total","value":$publishedTotal,"unit":"sec",""" +
       f""""steady_total_sec":$total,"cache_build_sec":$cacheBuildSec%.3f,""" +
-      s""""queries":$qs,""" +
+      s""""cache_builds":$cacheBuilds,"queries":$qs,""" +
       s""""attempts":$attemptsJson,""" +
       s""""cdc_rows":$cdcRows,"cdc_sec":$cdcSec,"cdc_rows_per_sec":$cdcRps,""" +
       s""""cdc_debezium_rows_per_sec":$dbzRps,""" +
@@ -283,7 +221,7 @@ object Bench {
       .map { case (k, v, _) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     println(f"""{"metric":"total","value":$publishedTotal%.3f,"unit":"sec","n_queries":${results.length},""" +
       f""""steady_total_sec":$total%.3f,"cache_build_sec":$cacheBuildSec%.3f,""" +
-      digest +
+      s""""cache_builds":$cacheBuilds,""" + digest +
       s""""cdc_rows":$cdcRows,"cdc_sec":$cdcSec,"cdc_rows_per_sec":$cdcRps,""" +
       s""""cdc_debezium_rows_per_sec":$dbzRps,""" +
       s""""errors":$errsJson,"slowest":$slowest,""" +

@@ -26,15 +26,13 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // Storage hygiene: a 300-query Verify run builds every session
-    // family cache (shingles, training frames, pair tables); drop them
-    // (clearCaches also unpersists the checkpoint RDD blocks) before
-    // the session ends so a caller reusing this JVM isn't left with a
-    // block manager full of pinned frames.
-    graft.queries.Dedup.clearCaches(spark)
-    graft.queries.LangModel.clearCaches(spark)
-    graft.queries.TextOps.clearCaches(spark)
-    graft.queries.Timeseries.clearCaches(spark)
+    // Storage hygiene: a 300-query Verify run builds every shared
+    // artifact (shingles, training frames, pair tables, replay
+    // indexes); drop them (unpersisting their RDD blocks and deleting
+    // their temp directories) before the session ends so a caller
+    // reusing this JVM isn't left with a block manager full of pinned
+    // frames.
+    graft.queries.FamilyCaches.clear(spark)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -559,18 +559,16 @@ object Analytic {
     * these queries express is ONE incrementally-maintained index
     * serving every non-subtractable view (min/max, median, top-k,
     * distinct), so the family pays the replay once per session, like a
-    * real maintainer pays it once per batch. The memo holds only the
-    * DISK path: no RDDs survive the per-query bench sweep, each query
-    * reads the index back from parquet.
+    * real maintainer pays it once per batch. The artifact is only the
+    * DISK directory (a [[FamilyCaches.memoDir]] entry): no RDDs survive
+    * the per-query bench sweep, each query reads the index back from
+    * parquet.
     */
-  private val mvReplayCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   private def replayMinMaxIndex(s: SparkSession, dir: String): String =
-    mvReplayCache.getOrElseUpdate((s, dir), replayMinMaxIndexUncached(s, dir))
+    FamilyCaches.memoDir(s, s"q271Replay:$dir", "graft_q271_mv")(
+      replayMinMaxIndexInto(s, dir, _))
 
-  private def replayMinMaxIndexUncached(s: SparkSession, dir: String): String = {
-    FamilyCaches.noteBuild() // one-time replay, priced into cache_build_sec
+  private def replayMinMaxIndexInto(s: SparkSession, dir: String, base: String): Unit = {
     import s.implicits._
     val log = Tables.load(s, dir, "events")
       .withColumn("op",
@@ -592,7 +590,6 @@ object Analytic {
         .otherwise(map().cast("map<string,string>")).as("newData"),
       $"op")
       .localCheckpoint(true) // one scan feeds all three replay batches
-    val base = java.nio.file.Files.createTempDirectory("graft_q271_mv").toString
     (0 until 3).foreach { i =>
       val changes = graft.streaming.Materialize.applyBatchCdf(
         events.filter(pmod($"batch_src", lit(3)) === i).drop("batch_src"),
@@ -601,7 +598,6 @@ object Analytic {
         changes, groupField = "event_type", measureField = "event_id",
         s"$base/idx", s"$base/view", nBuckets = 8)
     }
-    base
   }
 
   /** q273 — exact per-group MEDIAN served FROM the maintained value
@@ -773,8 +769,7 @@ object Analytic {
     */
   def q284CdcDecimalMv(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = decimalMvReplayCache.getOrElseUpdate((s, dir),
-      replayDecimalMvUncached(s, dir))
+    val base = replayDecimalMv(s, dir)
     graft.streaming.Materialize.minMaxView(s, s"$base/view")
       .select($"grp".as("o_orderpriority"),
         $"mn".as("min_totalprice_cents"), $"mx".as("max_totalprice_cents"), $"n")
@@ -785,11 +780,11 @@ object Analytic {
     * deployment model is ONE maintained index; the suite prices view
     * reads and QBench's cold column publishes the replay.
     */
-  private val decimalMvReplayCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private def replayDecimalMv(s: SparkSession, dir: String): String =
+    FamilyCaches.memoDir(s, s"q284Replay:$dir", "graft_q284_mv")(
+      replayDecimalMvInto(s, dir, _))
 
-  private def replayDecimalMvUncached(s: SparkSession, dir: String): String = {
-    FamilyCaches.noteBuild() // one-time replay, priced into cache_build_sec
+  private def replayDecimalMvInto(s: SparkSession, dir: String, base: String): Unit = {
     import s.implicits._
     val log = Tables.load(s, dir, "orders")
       .withColumn("op",
@@ -811,7 +806,6 @@ object Analytic {
         .otherwise(map().cast("map<string,string>")).as("newData"),
       $"op")
       .localCheckpoint(true) // one scan feeds all three replay batches
-    val base = java.nio.file.Files.createTempDirectory("graft_q284_mv").toString
     (0 until 3).foreach { i =>
       val changes = graft.streaming.Materialize.applyBatchCdf(
         events.filter(pmod($"batch_src", lit(3)) === i).drop("batch_src"),
@@ -826,7 +820,6 @@ object Analytic {
         changes, groupField = "o_orderpriority", measureField = "o_totalprice",
         s"$base/moments", measureScale = 2)
     }
-    base
   }
 
   /** q288 — exact incremental MEAN/VARIANCE view over the decimal
@@ -848,8 +841,7 @@ object Analytic {
     */
   def q288CdcMomentsMv(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = decimalMvReplayCache.getOrElseUpdate((s, dir),
-      replayDecimalMvUncached(s, dir))
+    val base = replayDecimalMv(s, dir)
     graft.streaming.Materialize.momentsView(s, s"$base/moments")
       .select($"grp".as("o_orderpriority"), $"n",
         $"s1".as("sum_totalprice_cents"), $"mean".as("mean_cents"),

@@ -47,86 +47,45 @@ object Dedup {
     */
   private val Tau = 0.8
 
-  /** documents + their word-3-gram shingle sets hashed to longs, cached:
-    * every near-dup query references this frame from several join
-    * branches, and without a cache Spark recomputes the shingling per
-    * branch (measured: the recomputation, not the joins, dominated).
-    *
-    * Bounded: stopped-session entries are evicted on every access, and a
-    * session holds at most ONE live entry — asking for a new dir
-    * unpersists and replaces the previous one. Steady state is one
-    * cached frame per live session, regardless of invocation count.
-    */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Per-query signature scratch frames (q41 sig / q42 sim), same bound:
-    * a new invocation unpersists the previous invocation's frame, so
-    * repeated runs in one session (test suites, repeated benches) never
-    * accumulate executor storage.
+  /** Per-query signature scratch frames (q41 sig / q42 sim / q148
+    * rank and sig): a new invocation unpersists the previous
+    * invocation's frame, so repeated runs in one session (test suites,
+    * repeated benches) never accumulate executor storage.
     */
   private val scratchCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  private def evict[K <: (SparkSession, String)](
-      cache: scala.collection.concurrent.TrieMap[K, DataFrame])(stale: K => Boolean): Unit =
-    cache.keySet.foreach { k =>
-      val dead = k._1.sparkContext.isStopped
-      if (dead || stale(k))
-        cache.remove(k).foreach(df => if (!dead) df.unpersist(false))
-    }
-
   private def cacheScratch(s: SparkSession, key: String, df: DataFrame): DataFrame = {
-    evict(scratchCache)(k => k._1 == s && k._2 == key)
+    scratchCache.keySet.foreach { k =>
+      val dead = k._1.sparkContext.isStopped
+      if (dead || k == ((s, key)))
+        scratchCache.remove(k).foreach(df => if (!dead) df.unpersist(false))
+    }
     val cached = df.cache()
     scratchCache.put((s, key), cached)
     cached
   }
 
-  private def shingled(s: SparkSession, dir: String): DataFrame = {
-    // memoized per (session, dir): q40/q41/q42 in one session share ONE
-    // cached frame instead of pinning three copies of the same data
-    evict(shingleCache)(k => k._1 == s && k._2 != dir)
-    shingleCache.get((s, dir)).getOrElse {
-      FamilyCaches.noteBuild()
+  /** documents + their word-3-gram shingle sets hashed to longs, the
+    * family's shared artifact: every near-dup query references this
+    * frame from several join branches, and without materialization
+    * Spark recomputes the shingling per branch (measured: the
+    * recomputation, not the joins, dominated).
+    */
+  private def shingled(s: SparkSession, dir: String): DataFrame =
+    FamilyCaches.memo(s, s"shingles:$dir") {
       graft.GraftExtensions.register(s)
       // native one-pass shingle hashing (same XXH64 set as the previous
       // split/transform/array_distinct/xxhash64 chain, which evaluated
-      // interpreted and dominated the cold-cache build)
-      val built = Tables.load(s, dir, "documents")
+      // interpreted and dominated the cold build)
+      Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           call_function("word_shingle_hashes", col("text")).as("sh"))
-        .cache()
-      // putIfAbsent, not getOrElseUpdate: under a concurrent first call
-      // the loser's frame must be unpersisted, or its (lazy, so still
-      // unmaterialized — the unpersist is free) cache entry leaks
-      shingleCache.putIfAbsent((s, dir), built) match {
-        case Some(winner) => built.unpersist(false); winner
-        case None         => built
-      }
+        .localCheckpoint(true)
     }
-  }
 
-  /** Build and MATERIALIZE the shared shingle cache for `dir` —
-    * [[graft.queries.Families.warm]]'s hook; the frame is lazy-cached,
-    * so forcing it here is what moves the cost out of the first
-    * family query.
-    */
-  private[graft] def warmShingles(s: SparkSession, dir: String): Unit = {
-    shingled(s, dir).count(); ()
-  }
-
-  /** Drop every cached scratch frame this session holds (shingle + per-query
-    * signature caches). Benchmarks call this after the dedup family so the
-    * cached frames' executor storage cannot pressure later queries' heap.
-    */
-  def clearCaches(s: SparkSession): Unit = {
-    evict(shingleCache)(k => k._1 == s)
-    evict(scratchCache)(k => k._1 == s)
-    rankCache.keySet.foreach { k =>
-      if (k._1 == s) rankCache.remove(k).foreach(FamilyCaches.unpersistCheckpoints)
-    }
-  }
+  /** Kept as a forwarder: the lanes benchmark calls it by name. */
+  def clearCaches(s: SparkSession): Unit = FamilyCaches.clear(s)
 
   /** The rarity-ranked exploded shingle table (doc_id, g, pos, n):
     * every token of every doc with its global-rarity rank inside the
@@ -137,17 +96,11 @@ object Dedup {
     * doc-keyed windows ran twice per suite pass (×2 attempts) for a
     * τ-independent result; only the prefix-length FILTER differs per
     * lane, and filtering the checkpointed frame is row-level, so the
-    * outputs are unchanged (guide §2.4). Session-memoized under the
-    * family-cache discipline: both consumers are Bench cacheSharers in
-    * the shingle segment, the build notes itself for cache_build_sec,
-    * and [[clearCaches]] unpersists the checkpoint.
+    * outputs are unchanged (guide §2.4). A [[FamilyCaches]] artifact
+    * nested over the shingle artifact.
     */
-  private val rankCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[queries] def rarityRanked(s: SparkSession, dir: String): DataFrame =
-    rankCache.getOrElseUpdate((s, dir), {
-      FamilyCaches.noteBuild()
+    FamilyCaches.memo(s, s"rarityRanked:$dir") {
       import s.implicits._
       val w = org.apache.spark.sql.expressions.Window
       val ex = shingled(s, dir).select($"doc_id", explode($"sh").as("g"))
@@ -158,7 +111,7 @@ object Dedup {
         .withColumn("n", count(lit(1)).over(w.partitionBy($"doc_id")))
         .select($"doc_id", $"g", $"pos", $"n")
         .localCheckpoint(true)
-    })
+    }
 
   /** Exact Jaccard for candidate pairs (d1 < d2), computed as a count
     * aggregation over the exploded shingle table restricted to the
@@ -222,21 +175,19 @@ object Dedup {
       |FROM (SELECT * FROM documents UNION ALL SELECT * FROM documents)
       |GROUP BY text ORDER BY doc_id""".stripMargin
 
-  /** The exact pair set is the shared product of the dedup family — q40
-    * emits it, q45 clusters over it — so it is memoized per
-    * (session, dir) with the same bounded discipline as the shingle
-    * frame (putIfAbsent, loser unpersisted, stale dirs evicted,
-    * clearCaches drops it). Unordered; callers add their own ORDER BY.
+  /** The exact pair set is the shared product of the dedup family —
+    * q40 emits it; q45, q72, q75, q94, q98, q223, q227 and q300 read
+    * it — so it is
+    * a [[FamilyCaches]] artifact nested over the shingle artifact.
+    * Unordered; callers add their own ORDER BY.
     */
-  private def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val key = s"q40pairs:$dir"
-    evict(scratchCache)(k => k._1 == s && k._2.startsWith("q40pairs:") && k._2 != key)
-    scratchCache.get((s, key)).getOrElse {
+  private def nearDupPairs(s: SparkSession, dir: String): DataFrame =
+    FamilyCaches.memo(s, s"nearDupPairs:$dir") {
+      import s.implicits._
       val docs = shingled(s, dir)
       val ex = docs.select($"doc_id", explode($"sh").as("g"))
       val sz = docs.select($"doc_id", size($"sh").as("n"))
-      val built = ex.as("a").join(ex.as("b"),
+      ex.as("a").join(ex.as("b"),
           $"a.g" === $"b.g" && $"a.doc_id" < $"b.doc_id")
         .groupBy($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
         .agg(count(lit(1)).as("inter"))
@@ -245,13 +196,8 @@ object Dedup {
         .withColumn("jac", $"inter".cast("double") / ($"sa.n" + $"sb.n" - $"inter"))
         .filter($"jac" >= Tau)
         .select($"d1", $"d2", $"jac")
-        .cache()
-      scratchCache.putIfAbsent((s, key), built) match {
-        case Some(winner) => built.unpersist(false); winner
-        case None         => built
-      }
+        .localCheckpoint(true)
     }
-  }
 
   /** Exact n-gram Jaccard near-dup pairs — the quadratic baseline: explode
     * shingle hashes, self-join, count intersections per pair, filter ≥ τ.
@@ -1238,14 +1184,7 @@ object Dedup {
     * included, not the full pair set).
     */
   def q148SortedNeighborhood(s: SparkSession, dir: String,
-      w: Int = 10, parts: Int = 32): DataFrame =
-    snmStages(s, dir, w, parts)._4
-
-  /** The q148 pipeline with its stage frames exposed (rank / candidates
-    * / filtered / verified), so each stage can be timed in isolation.
-    */
-  private[graft] def snmStages(s: SparkSession, dir: String,
-      w: Int = 10, parts: Int = 32): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      w: Int = 10, parts: Int = 32): DataFrame = {
     import s.implicits._
     val W = org.apache.spark.sql.expressions.Window
     val docs = shingled(s, dir)
@@ -1301,7 +1240,7 @@ object Dedup {
       .join(sig.as("q"), $"d2" === $"q.doc_id")
       .filter(call_function("slot_agreement", $"p.sig", $"q.sig") / 64.0 >= 0.3)
       .select($"d1", $"d2")
-    (ranked, cands, filtered, verifyPairs(filtered, docs))
+    verifyPairs(filtered, docs)
   }
 
   def q148SortedNeighborhoodSql(w: Int = 10): String =
@@ -1355,8 +1294,10 @@ object Dedup {
     * same exact-Jaccard verify); the candidate count for a width-w
     * rank band is the CLOSED FORM n·w − w(w+1)/2 — no extra join runs
     * just to count candidates. One row; every count is an aggregate,
-    * nothing collects; the shingle/signature scratch caches are shared
-    * with the family, so in-suite the marginal cost is two counts.
+    * nothing collects. The shingle and pair artifacts are shared with
+    * the family, but the found set re-runs q148's whole pipeline (its
+    * rank and signature frames are per-invocation scratch), so q223
+    * costs about one q148 run plus the counts.
     */
   def q223BlockingEval(s: SparkSession, dir: String, w: Int = 10): DataFrame = {
     import s.implicits._

@@ -985,25 +985,16 @@ object LangModel {
   /** Default merge-round budget for q255. */
   val WordPieceRounds = 10
 
-  /** Memoized WordPiece training frames: q255 (merge table) and q256
-    * (encoder) are reports off the SAME merge run — the q250/q251
-    * family-cache discipline. Cleared by [[clearCaches]]; Bench marks
-    * both queries cacheSharers.
-    */
-  private val wpCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (Seq[DataFrame], DataFrame)]
-
   /** The q255 training loop, exposed for [[q256WordPieceEncode]]:
     * returns the per-round merge frames AND the trained vocabulary
-    * (word → final symbol string) after `rounds` merges. Memoized per
-    * (session, dir, rounds).
+    * (word → final symbol string) after `rounds` merges. q255 (merge
+    * table) and q256 (encoder) are reports off the SAME merge run, so
+    * it is a [[FamilyCaches]] artifact per (session, dir, rounds).
     */
   private[queries] def wordPieceTrainFrames(s: SparkSession, dir: String,
       rounds: Int): (Seq[DataFrame], DataFrame) =
-    wpCache.getOrElseUpdate((s, dir, rounds), {
-      FamilyCaches.noteBuild()
-      wordPieceTrainFramesUncached(s, dir, rounds)
-    })
+    FamilyCaches.memo(s, s"wordPiece:$rounds:$dir")(
+      wordPieceTrainFramesUncached(s, dir, rounds))
 
   private def wordPieceTrainFramesUncached(s: SparkSession, dir: String,
       rounds: Int): (Seq[DataFrame], DataFrame) = {
@@ -1083,9 +1074,9 @@ object LangModel {
     * no merge row and an empty vocabulary thereafter (the q231
     * convention, spec-pinned there).
     *
-    * Cold start: the first wpCache consumer in a session pays the
-    * shared merge-loop training (corpus-scan + bounded rounds);
-    * [[Families.warm]] prepays it.
+    * Cold start: the first consumer of the WordPiece artifact in a
+    * session pays the shared merge-loop training (corpus-scan +
+    * bounded rounds); later consumers read it.
     */
   def q255WordPieceTrain(s: SparkSession, dir: String,
       rounds: Int = WordPieceRounds): DataFrame = {
@@ -1155,8 +1146,8 @@ object LangModel {
     * merge history is prefix-closed; the CONTRACT here is replay).
     * Encoding is a broadcast join corpus-words → trained vocabulary:
     * one corpus scan, one broadcast probe, one per-source aggregate.
-    * Cold start: first wpCache consumer pays the shared merge-loop
-    * training; [[Families.warm]] prepays it.
+    * Cold start: the first consumer of the WordPiece artifact pays the
+    * shared merge-loop training.
     */
   def q256WordPieceEncode(s: SparkSession, dir: String,
       rounds: Int = WordPieceRounds): DataFrame = {
@@ -1237,54 +1228,22 @@ object LangModel {
     element_at(folded, length(word) + 1)
   }
 
-  /** Memoized trained-segmenter artifacts: q250 (training curve) and
-    * q251 (encoder) are reports off the SAME EM run, so one session
-    * trains once per (dir, rounds) and both queries read the shared
-    * localCheckpointed frames — the q40/q45 family-cache discipline.
-    * Bench marks both queries cacheSharers so the checkpoints survive
-    * between them, and clears this map alongside Dedup.clearCaches.
-    */
-  private val trainCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (Seq[DataFrame], DataFrame, DataFrame)]
-
-  /** Drop this session's memoized training frames (storage reclaim is
-    * the caller's RDD sweep; localCheckpointed frames have no lineage
-    * to recompute from, so a dropped entry simply retrains next use).
-    */
-  def clearCaches(s: SparkSession): Unit = {
-    // unpersist dropped entries' checkpoint RDDs (see TextOps.clearCaches)
-    trainCache.keySet.foreach { k =>
-      if (k._1 == s) trainCache.remove(k).foreach { case (rounds, viterbi, qlp) =>
-        (rounds :+ viterbi :+ qlp).foreach(FamilyCaches.unpersistCheckpoints)
-      }
-    }
-    wpCache.keySet.foreach { k =>
-      if (k._1 == s) wpCache.remove(k).foreach { case (rounds, vocab) =>
-        (rounds :+ vocab).foreach(FamilyCaches.unpersistCheckpoints)
-      }
-    }
-    kn4Cache.keySet.foreach { k =>
-      if (k._1 == s) kn4Cache.remove(k).foreach { f =>
-        Seq(f.qg, f.h4, f.c4t, f.mid3, f.tg3, f.mid2, f.cont, f.tot)
-          .foreach(FamilyCaches.unpersistCheckpoints)
-      }
-    }
-  }
+  /** Kept as a forwarder: the lanes benchmark calls it by name. */
+  def clearCaches(s: SparkSession): Unit = FamilyCaches.clear(s)
 
   /** The q250 training loop, exposed for [[q251UnigramEncode]]:
     * returns the per-round summary frames, the FINAL round's
     * per-word Viterbi frame (word, freq, score, seg) — the trained
     * segmenter artifact the encoder broadcasts — and the final
     * round's quantized scoring table (piece, qlp) the n-best sampler
-    * (q254) re-derives its DP from. Memoized per (session, dir,
-    * rounds).
+    * (q254) re-derives its DP from. q250/q251/q254/q259 are reports
+    * off the SAME EM run, so it is a [[FamilyCaches]] artifact per
+    * (session, dir, rounds).
     */
   private[queries] def unigramTrainFrames(s: SparkSession, dir: String,
       rounds: Int): (Seq[DataFrame], DataFrame, DataFrame) =
-    trainCache.getOrElseUpdate((s, dir, rounds), {
-      FamilyCaches.noteBuild()
-      unigramTrainFramesUncached(s, dir, rounds)
-    })
+    FamilyCaches.memo(s, s"unigram:$rounds:$dir")(
+      unigramTrainFramesUncached(s, dir, rounds))
 
   private def unigramTrainFramesUncached(s: SparkSession, dir: String,
       rounds: Int): (Seq[DataFrame], DataFrame, DataFrame) = {
@@ -1369,9 +1328,9 @@ object LangModel {
     * one piece-keyed aggregate, and per-round lineage is cut with
     * eager localCheckpoints (the q215 discipline).
     *
-    * Cold start: the first trainCache consumer in a session pays the
-    * shared EM training (~9 s at sf0.1, corpus-scan cost class);
-    * [[Families.warm]] prepays it.
+    * Cold start: the first consumer of the unigram artifact in a
+    * session pays the shared EM training (~9 s at sf0.1, corpus-scan
+    * cost class); later consumers read it.
     */
   def q250UnigramTrain(s: SparkSession, dir: String,
       rounds: Int = UnigramRounds): DataFrame = {
@@ -1388,8 +1347,8 @@ object LangModel {
     * encoding is a broadcast join corpus-words → segmenter — one
     * corpus scan, one broadcast probe, one per-source aggregate.
     * chars_per_token is ONE double division of two exact BIGINT sums.
-    * Cold start: first trainCache consumer pays the shared EM run
-    * (~9 s at sf0.1); [[Families.warm]] prepays it.
+    * Cold start: the first consumer of the unigram artifact pays the
+    * shared EM run (~9 s at sf0.1).
     */
   def q251UnigramEncode(s: SparkSession, dir: String,
       rounds: Int = UnigramRounds): DataFrame = {
@@ -1566,9 +1525,9 @@ object LangModel {
     * At 100 TB: rides the q250/q251 shared training artifact (memoized
     * frames — zero extra corpus scans); the n-best DP is one broadcast
     * map probe per DISTINCT word; the report is ONE rank-keyed
-    * aggregate over ≤ n × |vocab words| rows. Cold start: first
-    * trainCache consumer pays the shared EM run (~9 s at sf0.1);
-    * [[Families.warm]] prepays it.
+    * aggregate over ≤ n × |vocab words| rows. Cold start: the first
+    * consumer of the unigram artifact pays the shared EM run (~9 s at
+    * sf0.1).
     */
   def q254UnigramNbest(s: SparkSession, dir: String,
       rounds: Int = UnigramRounds, nBest: Int = UnigramNBest): DataFrame = {
@@ -1711,13 +1670,13 @@ object LangModel {
     * |langs|×K profile, per-doc K-row rank via WindowGroupLimit, one
     * (doc, lang)-keyed bounded aggregate); the encoder is q251's
     * (broadcast segmenter join, one corpus scan); the final aggregate
-    * is |langs| rows. ALL trained artifacts ride memoized family
-    * caches (r16: the CT profile and per-doc rank profile are
-    * session-cached too — TextOps.ctProfCached/ctDocGCached), so both
-    * models train once per session and this lane's steady-state cost
-    * is the probe joins + the segmenter aggregate alone (QBench r16:
-    * 9.3 s suite → 1.3 s warm). Cold start: the family heads pay the
-    * builds; [[Families.warm]] prepays everything.
+    * is |langs| rows. ALL trained artifacts are [[FamilyCaches]]
+    * artifacts (the CT profile and per-doc rank profile too —
+    * TextOps.ctProfCached/ctDocGCached), so both models train once per
+    * session and this lane's steady-state cost is the probe joins +
+    * the segmenter aggregate alone (QBench r16: 9.3 s suite → 1.3 s
+    * warm). Cold start: the first consumer of each artifact pays its
+    * build.
     */
   def q259FertilityByLang(s: SparkSession, dir: String,
       rounds: Int = UnigramRounds): DataFrame = {
@@ -2155,26 +2114,18 @@ object LangModel {
       c4t: DataFrame, mid3: DataFrame, tg3: DataFrame, mid2: DataFrame,
       cont: DataFrame, tot: DataFrame)
 
-  /** Session memo for the seven KN-4 model tables (q290 scoring, q291
-    * export, q295 serving build the SAME model by construction — one
-    * builder, now also one materialization per session): the same
-    * family-cache discipline as the unigram trainCache; Bench lists
-    * the three consumers as cacheSharers and [[clearCaches]] drops the
-    * entry at the family segment end. The memoized pieces are the two
+  /** The seven KN-4 model tables (q290 scoring, q291 export, q295
+    * serving build the SAME model by construction — one builder, one
+    * materialization per session): a [[FamilyCaches]] artifact per
+    * (session, dir, minCount). The memoized pieces are the two
     * eagerly-checkpointed TYPE-bounded frames (qg, tg3) plus the lazy
     * marginals derived from them — re-deriving a marginal is one
     * aggregate over a checkpointed frame, exactly what each lane paid
     * before within itself.
     */
-  private val kn4Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), Kn4Frames]
-
   private[queries] def kn4Frames(s: SparkSession, dir: String,
       minCount: Int = 2): Kn4Frames =
-    kn4Cache.getOrElseUpdate((s, dir, minCount), {
-      FamilyCaches.noteBuild()
-      kn4FramesUncached(s, dir, minCount)
-    })
+    FamilyCaches.memo(s, s"kn4:$minCount:$dir")(kn4FramesUncached(s, dir, minCount))
 
   private def kn4FramesUncached(s: SparkSession, dir: String, minCount: Int): Kn4Frames = {
     import s.implicits._

@@ -363,16 +363,6 @@ object Similarity {
       }
       .start()
 
-  /** One live index per (session, source dir, codebook size); rebuilt
-    * only when absent, and each build is a family-cache build
-    * ([[FamilyCaches.noteBuild]]), so Bench prices it in
-    * `cache_build_sec`. Stopped-session entries are evicted on access
-    * (same bounded-cache discipline as Dedup's shingle frame), and an
-    * evicted entry's temp directory is deleted with it.
-    */
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), String]
-
   /** q52: the persisted-index flavor of q51 — same query set, same
     * codebook recipe, same output contract; the corpus scan is partition-
     * pruned to the probed cells. Registered (full-probe) under the q50
@@ -382,17 +372,11 @@ object Similarity {
   def q52AnnIvfIndexed(s: SparkSession, dir: String,
       nCentroids: Int = 8, nProbe: Int = 2): DataFrame = {
     import s.implicits._
-    indexCache.keySet.foreach { k =>
-      if (k._1.sparkContext.isStopped) indexCache.remove(k).foreach { p =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-      }
-    }
-    val indexPath = indexCache.getOrElseUpdate((s, dir, nCentroids), {
-      FamilyCaches.noteBuild()
-      val p = java.nio.file.Files.createTempDirectory("graft_ivf_index").toString
-      writeIvfIndex(s, dir, p, nCentroids)
-      p
-    })
+    // one live index per (session, source dir, codebook size): a
+    // FamilyCaches on-disk artifact, so Bench prices the build in
+    // cache_build_sec and clear deletes the directory
+    val indexPath = FamilyCaches.memoDir(s, s"ivfIndex:$nCentroids:$dir",
+      "graft_ivf_index")(writeIvfIndex(s, dir, _, nCentroids))
     val q = Tables.load(s, dir, "embeddings")
       .filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qe"))

@@ -279,42 +279,24 @@ object TextOps {
         substring($"tg", 2, CtGramMax).as("g"))
   }
 
-  /** Session-memoized CT artifacts shared by q252/q253/q259 — the same
-    * family-cache discipline as the dedup shingle cache and the unigram
-    * EM trainCache (Bench lists the three consumers as cacheSharers and
-    * clears via [[clearCaches]] at the family segment end): the trained
-    * per-language profile (bounded |langs|×K rows) and the per-doc
-    * top-K gram rank profile over ALL docs with lang + split bucket
+  /** Kept as a forwarder: the lanes benchmark calls it by name. */
+  def clearCaches(s: SparkSession): Unit = FamilyCaches.clear(s)
+
+  /** The CT artifacts shared by q252/q253/q259, two [[FamilyCaches]]
+    * artifacts per (session, dir): the trained per-language profile
+    * (bounded |langs|×K rows) and the per-doc top-K gram rank profile
+    * over ALL docs with lang + split bucket
     * carried (≤ K rows/doc — q253 filters its eval split from it, q259
     * reads it whole; lang is constant per doc so the doc-only rank
     * window is identical to q253's old (doc, lang, g) grouping).
     * Before the memo each of the three lanes re-derived these from its
     * own corpus-sized gram scan — 5 gram scans per suite run, now 2.
     */
-  private val ctCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  def clearCaches(s: SparkSession): Unit = {
-    // unpersist the dropped entries' checkpoint RDDs too: outside
-    // Bench's per-family sweep (Verify, interactive sessions) removing
-    // the map entry alone would pin the blocks for the JVM's life
-    ctCache.keySet.foreach { k =>
-      if (k._1 == s) ctCache.remove(k).foreach(FamilyCaches.unpersistCheckpoints)
-    }
-    contamCache.keySet.foreach { k =>
-      if (k._1 == s) contamCache.remove(k).foreach(FamilyCaches.unpersistCheckpoints)
-    }
-  }
-
   private[queries] def ctProfCached(s: SparkSession, dir: String): DataFrame =
-    ctCache.getOrElseUpdate((s, dir, "prof"), {
-      FamilyCaches.noteBuild()
-      ctProfileFrame(s, dir).localCheckpoint(true)
-    })
+    FamilyCaches.memo(s, s"ctProfile:$dir")(ctProfileFrame(s, dir).localCheckpoint(true))
 
   private[queries] def ctDocGCached(s: SparkSession, dir: String): DataFrame =
-    ctCache.getOrElseUpdate((s, dir, "docg"), {
-      FamilyCaches.noteBuild()
+    FamilyCaches.memo(s, s"ctDocRanks:$dir") {
       import s.implicits._
       val wd = org.apache.spark.sql.expressions.Window
         .partitionBy($"doc_id").orderBy($"cnt".desc, $"g")
@@ -324,7 +306,7 @@ object TextOps {
         .withColumn("dr", row_number().over(wd))
         .filter($"dr" <= CtK)
         .localCheckpoint(true)
-    })
+    }
 
   /** The trained per-language rank profiles (train split only):
     * top-[[CtK]] grams per language by summed occurrence count, ranked
@@ -1668,18 +1650,18 @@ object TextOps {
     * a real eval set is tiny (runtime-sized broadcast), but FORCING
     * the hint would OOM/degrade when the eval frame grows with the
     * corpus (the registered %-50 contract ties eval size to corpus
-    * size, so the derived decade grows it 10×). `evalCap` fixes the
-    * eval set (the deployment shape: the corpus grows, the benchmark
-    * suite does not). Measured at sf1d post-fix, capped ≈ uncapped —
-    * the lanes are corpus-scan-bound, the honest linear term.
+    * size, so the derived decade grows it 10×). Measured at the sf1d
+    * derived decade, fixing the eval set at its sf0.1 size (the
+    * deployment shape: the corpus grows, the benchmark suite does not)
+    * ran as fast as the growing %-50 set — the lanes are
+    * corpus-scan-bound, the honest linear term.
     */
-  private[queries] def contaminationPairs(s: SparkSession, loaded: DataFrame,
-      evalCap: Long = Long.MaxValue): DataFrame = {
+  private[queries] def contaminationPairs(s: SparkSession, loaded: DataFrame): DataFrame = {
     import s.implicits._
     graft.GraftExtensions.register(s)
     val sh = loaded.select($"doc_id",
       call_function("word_shingle_hashes", $"text").as("sh"))
-    val evSh = sh.filter($"doc_id" % 50 === 0 && $"doc_id" <= evalCap)
+    val evSh = sh.filter($"doc_id" % 50 === 0)
       .select($"doc_id".as("eval_doc"), explode($"sh").as("g")).distinct()
     sh.filter($"doc_id" % 50 =!= 0)
       .select($"doc_id".as("train_doc"), explode($"sh").as("g"))
@@ -1689,8 +1671,8 @@ object TextOps {
 
   /** r16 optimization: q278 (BLEU-2) and q279 (chrF) score the SAME
     * candidate pair table — one generator, now also one
-    * materialization per session (family-cache discipline; Bench lists
-    * both as cacheSharers). The checkpoint is also what lets each lane
+    * materialization per session (a [[FamilyCaches]] artifact per
+    * (session, dir)). The checkpoint is also what lets each lane
     * semi-join-prune its n-gram count tables to docs that actually
     * appear in a pair (guide §3.2: reduce the big side before the
     * shuffle) without re-running the generator per branch — the pair
@@ -1700,16 +1682,9 @@ object TextOps {
     * grams of docs outside the pair table never survive the pair
     * joins.
     */
-  private val contamCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long), DataFrame]
-
-  private[queries] def contaminationPairsCached(s: SparkSession, dir: String,
-      evalCap: Long): DataFrame =
-    contamCache.getOrElseUpdate((s, dir, evalCap), {
-      FamilyCaches.noteBuild()
-      contaminationPairs(s, Tables.load(s, dir, "documents"), evalCap)
-        .localCheckpoint(true)
-    })
+  private[queries] def contaminationPairsCached(s: SparkSession, dir: String): DataFrame =
+    FamilyCaches.memo(s, s"contaminationPairs:$dir")(
+      contaminationPairs(s, Tables.load(s, dir, "documents")).localCheckpoint(true))
 
   /** The contamination-pruned corpus, one projected column per lane
     * (q278: word arrays; q279: space-stripped chars) — semi-join prune
@@ -1721,9 +1696,9 @@ object TextOps {
     * pre-checkpoint plan audit (the contaminationPairs precedent).
     */
   private[queries] def contamPrunedDocs(s: SparkSession, dir: String,
-      evalCap: Long, projected: Column => Column, as: String): DataFrame = {
+      projected: Column => Column, as: String): DataFrame = {
     import s.implicits._
-    val pairs = contaminationPairsCached(s, dir, evalCap)
+    val pairs = contaminationPairsCached(s, dir)
     val pairedDocs = pairs.select($"train_doc".as("doc_id"))
       .union(pairs.select($"eval_doc".as("doc_id"))).distinct()
     Tables.load(s, dir, "documents")
@@ -1731,10 +1706,9 @@ object TextOps {
       .join(pairedDocs, Seq("doc_id"), "left_semi")
   }
 
-  def q278BleuContamination(s: SparkSession, dir: String,
-      evalCap: Long = Long.MaxValue): DataFrame = {
+  def q278BleuContamination(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pairs = contaminationPairsCached(s, dir, evalCap)
+    val pairs = contaminationPairsCached(s, dir)
     // r17: SIX plan branches reference the pruned corpus (uni/big gram
     // counts on both folds + two lens sides), and without
     // materialization each branch re-ran the corpus scan, the
@@ -1743,7 +1717,7 @@ object TextOps {
     // corpus-row-bounded and contamination-pruned — one eager
     // checkpoint per evaluation replaces five full subtree re-runs;
     // rows identical by construction.
-    val docs = contamPrunedDocs(s, dir, evalCap, t => split(t, " "), "ws")
+    val docs = contamPrunedDocs(s, dir, t => split(t, " "), "ws")
       .localCheckpoint(true)
     // n-gram multiset counts; bigram text via the same slice+join the
     // oracle uses (array_join(slice(ws,i,2))), so strings agree exactly
@@ -1754,7 +1728,7 @@ object TextOps {
         i => array_join(slice($"ws", i, lit(2)), " "))).as("b"))
       .groupBy($"doc_id", $"b").agg(count(lit(1)).as("c"))
     val lens = docs.select($"doc_id", size($"ws").cast("long").as("len"))
-    val evIds = $"doc_id" % 50 === 0 && $"doc_id" <= evalCap
+    val evIds = $"doc_id" % 50 === 0
     val trIds = $"doc_id" % 50 =!= 0
     val clip1 = pairs
       .join(uni.filter(trIds).withColumnRenamed("doc_id", "train_doc"), Seq("train_doc"))
@@ -1850,10 +1824,9 @@ object TextOps {
     * +,*,/ IEEE arithmetic in an identical shape on both engines
     * (no libm), presented FLOAT by house convention.
     */
-  def q279ChrfContamination(s: SparkSession, dir: String,
-      evalCap: Long = Long.MaxValue): DataFrame = {
+  def q279ChrfContamination(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pairs = contaminationPairsCached(s, dir, evalCap)
+    val pairs = contaminationPairsCached(s, dir)
     // r17: the pruned space-stripped corpus is referenced by FOUR plan
     // branches (train grams, eval grams, train lens, eval lens), and
     // without materialization each branch re-ran the corpus scan, the
@@ -1863,7 +1836,7 @@ object TextOps {
     // contamination-pruned (a few MB at sf0.1), so one eager
     // checkpoint per evaluation replaces three full subtree re-runs;
     // rows are identical by construction.
-    val cs = contamPrunedDocs(s, dir, evalCap,
+    val cs = contamPrunedDocs(s, dir,
         t => translate(t, " ", ""), "cs")
       .localCheckpoint(true)
     // tagged grams ride the native char_ngrams scan (one fused loop per
@@ -1874,7 +1847,7 @@ object TextOps {
     val grams = cs.select($"doc_id",
         explode(call_function("char_ngrams", $"cs", lit(3))).as("tg"))
       .groupBy($"doc_id", $"tg").agg(count(lit(1)).as("c"))
-    val evIds = $"doc_id" % 50 === 0 && $"doc_id" <= evalCap
+    val evIds = $"doc_id" % 50 === 0
     val trIds = $"doc_id" % 50 =!= 0
     val m = pairs
       .join(grams.filter(trIds).withColumnRenamed("doc_id", "train_doc"),

@@ -601,26 +601,17 @@ object Timeseries {
     * 100 TB everything shuffles once on the hour bucket; per-bucket
     * population is the concurrency level, not the corpus.
     */
-  /** Session memo for the interval-overlap pair table: q198 presents
-    * it sorted, q215's k-core peel consumes it as its edge source —
-    * the dedup-family shared-pair-cache discipline (Bench lists both
-    * consumers as cacheSharers; [[clearCaches]] drops the entry at the
-    * family segment end, and q215 no longer pays q198's presentation
-    * sort on top of the rebuild).
+  /** Kept as a forwarder: the lanes benchmark calls it by name. */
+  def clearCaches(s: SparkSession): Unit = FamilyCaches.clear(s)
+
+  /** The interval-overlap pair table: q198 presents it sorted, q203 and
+    * q215 consume it as their edge source — a [[FamilyCaches]]
+    * artifact per (session, dir), so q215 does not pay q198's
+    * presentation sort on top of a rebuild.
     */
-  private val ivCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  def clearCaches(s: SparkSession): Unit =
-    ivCache.keySet.foreach { k =>
-      if (k._1 == s) ivCache.remove(k).foreach(FamilyCaches.unpersistCheckpoints)
-    }
-
   private[queries] def intervalOverlapPairs(s: SparkSession, dir: String): DataFrame =
-    ivCache.getOrElseUpdate((s, dir), {
-      FamilyCaches.noteBuild()
-      intervalOverlapPairsUncached(s, dir).localCheckpoint(true)
-    })
+    FamilyCaches.memo(s, s"intervalOverlapPairs:$dir")(
+      intervalOverlapPairsUncached(s, dir).localCheckpoint(true))
 
   def q198IntervalJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -266,12 +266,15 @@ object PipelineProbe {
       topicDeltas: Map[String, Long])
 
   /** One drained micro-batch (≙ the reference's `ResponseHandler.OnSuccess`
-    * accounting plus its latency gauges).
+    * accounting plus its latency gauges). `processLatencyMs` is the
+    * latency of the batch's most recently processed row — the value
+    * the `graft_cdc_process_latency_current` gauge takes — or 0 when
+    * no row advanced it.
     */
   final case class BatchMetrics(
       batchId: Long,
       events: Long,
-      maxProcessLatencyMs: Long,
+      processLatencyMs: Long,
       batchDurationMs: Long)
 
   private[streaming] def column(e: Expression): Column =

@@ -21,10 +21,9 @@ object PlanShim {
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
   /** The persisted RDDs under a `localCheckpoint(true)`'d frame
-    * (LogicalRDD leaves). Session caches unpersist these when an entry
-    * is dropped — removing the map entry alone would leave the
-    * checkpoint blocks pinned in the block manager for the JVM's life
-    * in any session that doesn't run Bench's per-family sweep.
+    * (LogicalRDD leaves). `graft.queries.FamilyCaches` records these as
+    * the RDDs an artifact owns: the per-query sweep spares them, and
+    * clearing the artifact unpersists them.
     */
   def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect {

@@ -826,7 +826,7 @@ class PlanAuditSpec extends SparkSpec {
       (t => org.apache.spark.sql.functions.split(t, " "), "ws"),
       (t => org.apache.spark.sql.functions.translate(t, " ", ""), "cs")
     ).foreach { case (proj, as) =>
-      val df = TextOps.contamPrunedDocs(spark, dir, Long.MaxValue, proj, as)
+      val df = TextOps.contamPrunedDocs(spark, dir, proj, as)
       df.collect()
       val p = df.queryExecution.executedPlan.toString().split("== Initial Plan ==")(0)
       assert(p.contains("LeftSemi"),

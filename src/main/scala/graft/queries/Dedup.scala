@@ -47,32 +47,13 @@ object Dedup {
     */
   private val Tau = 0.8
 
-  /** Per-query signature scratch frames (q41 sig / q42 sim / q148
-    * rank and sig): a new invocation unpersists the previous
-    * invocation's frame, so repeated runs in one session (test suites,
-    * repeated benches) never accumulate executor storage.
-    */
-  private val scratchCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def cacheScratch(s: SparkSession, key: String, df: DataFrame): DataFrame = {
-    scratchCache.keySet.foreach { k =>
-      val dead = k._1.sparkContext.isStopped
-      if (dead || k == ((s, key)))
-        scratchCache.remove(k).foreach(df => if (!dead) df.unpersist(false))
-    }
-    val cached = df.cache()
-    scratchCache.put((s, key), cached)
-    cached
-  }
-
   /** documents + their word-3-gram shingle sets hashed to longs, the
     * family's shared artifact: every near-dup query references this
     * frame from several join branches, and without materialization
     * Spark recomputes the shingling per branch (measured: the
     * recomputation, not the joins, dominated).
     */
-  private def shingled(s: SparkSession, dir: String): DataFrame =
+  private[queries] def shingled(s: SparkSession, dir: String): DataFrame =
     FamilyCaches.memo(s, s"shingles:$dir") {
       graft.GraftExtensions.register(s)
       // native one-pass shingle hashing (same XXH64 set as the previous
@@ -116,7 +97,8 @@ object Dedup {
   /** Exact Jaccard for candidate pairs (d1 < d2), computed as a count
     * aggregation over the exploded shingle table restricted to the
     * candidates — no per-row set materialization. One shuffle on the
-    * shingle hash, one on the pair.
+    * shingle hash, one on the pair. Unordered; callers add their own
+    * ORDER BY.
     */
   private def verifyPairs(cands: DataFrame, docs: DataFrame): DataFrame = {
     val ex = docs.select(col("doc_id"), explode(col("sh")).as("g"))
@@ -133,7 +115,6 @@ object Dedup {
         (col("sa.n") + col("sb.n") - col("inter")))
       .filter(col("jac") >= Tau)
       .select(col("d1"), col("d2"), col("jac"))
-      .orderBy(col("d1"), col("d2"))
   }
 
   /** The one oracle shared by q40/q41/q42: ground-truth exact-Jaccard pairs. */
@@ -176,10 +157,12 @@ object Dedup {
       |GROUP BY text ORDER BY doc_id""".stripMargin
 
   /** The exact pair set is the shared product of the dedup family —
-    * q40 emits it; q45, q72, q75, q94, q98, q223, q227 and q300 read
-    * it — so it is
-    * a [[FamilyCaches]] artifact nested over the shingle artifact.
-    * Unordered; callers add their own ORDER BY.
+    * q40 emits it; q72, q75, q94, q138, q223 and q227 read it, and
+    * [[dupClusters]] (nested over it) labels its components for q45,
+    * q98, q228 and q300 — so it is a [[FamilyCaches]] artifact nested
+    * over the shingle artifact. Unordered; callers add their own
+    * ORDER BY. The family's other artifact is q148's verified
+    * sorted-neighbourhood pair set ([[snmPairs]]), which q223 reads.
     */
   private def nearDupPairs(s: SparkSession, dir: String): DataFrame =
     FamilyCaches.memo(s, s"nearDupPairs:$dir") {
@@ -226,14 +209,8 @@ object Dedup {
     import s.implicits._
     graft.GraftExtensions.register(s)
     val docs = shingled(s, dir)
-    // Signature via the native minhash_signature expression: one fused
-    // |sh|×64 loop per document, map-side, inside whole-stage codegen —
-    // NO shuffle. (History: a per-row nested transform/array_min chain
-    // evaluated interpreted and was ~30× slower; round 2's explode +
-    // 64-way min aggregation was codegen'd but paid a corpus×64-buffer
-    // hash-agg shuffle that dominated the query.)
-    val sig = cacheScratch(s, "q41_sig",
-      docs.select($"doc_id", call_function("minhash_signature", $"sh").as("sig")))
+    // checkpointed: both band self-join sides and both estimate joins read it
+    val sig = minhashSigs(docs).localCheckpoint(true)
     val bands = sig.select($"doc_id",
         explode(expr(
           "transform(sequence(0, 15), b -> struct(b AS band, xxhash64(slice(sig, b*4+1, 4)) AS bucket))"))
@@ -251,8 +228,20 @@ object Dedup {
         call_function("slot_agreement", $"p.sig", $"q.sig") / 64.0)
       .filter($"est" >= 0.3)
       .select($"d1", $"d2")
-    verifyPairs(estFiltered, docs)
+    verifyPairs(estFiltered, docs).orderBy($"d1", $"d2")
   }
+
+  /** The (doc_id, sig) MinHash signatures of a shingled frame, via the
+    * native minhash_signature expression: one fused |sh|×64 loop per
+    * document, map-side, inside whole-stage codegen — NO shuffle.
+    * (History: a per-row nested transform/array_min chain evaluated
+    * interpreted and was ~30× slower; round 2's explode + 64-way min
+    * aggregation was codegen'd but paid a corpus×64-buffer hash-agg
+    * shuffle that dominated the query.) Shared by q41 and q148; lazy,
+    * each caller checkpoints its own copy.
+    */
+  private[queries] def minhashSigs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), call_function("minhash_signature", col("sh")).as("sig"))
 
   /** SimHash near-dup: 64-bit signature (per-bit majority vote over shingle
     * xxhash64 bits), banded into 13 ~5-bit blocks — any-block-equal
@@ -299,13 +288,13 @@ object Dedup {
     // document with no shuffle and no 64 agg buffers. The geometric
     // length band rides along: log-base 1.25 = 1/τ, so a jac≥τ pair's
     // bands differ by at most 1 (|A∩B| ≤ min ∧ |A∪B| ≥ max ⇒ min/max ≥ τ).
-    val sim = cacheScratch(s, "q42_sim",
-      docs.select($"doc_id", call_function("simhash64", $"sh").as("simhash"),
-        floor(log(size($"sh").cast("double")) / log(lit(1.0 / Tau))).cast("int").as("band")))
+    val sim = docs.select($"doc_id", call_function("simhash64", $"sh").as("simhash"),
+        floor(log(size($"sh").cast("double")) / log(lit(1.0 / Tau))).cast("int").as("band"))
+      .localCheckpoint(true)
     // the signature is ONE long, so it rides the block explode for free —
-    // both self-join sides come straight off the cached sim frame with no
-    // join-back to re-attach it (the join-back form paid two extra
-    // doc_id-shuffles of the 13×corpus chunk frame)
+    // both self-join sides come straight off the checkpointed sim frame
+    // with no join-back to re-attach it (the join-back form paid two
+    // extra doc_id-shuffles of the 13×corpus chunk frame)
     val chunks = sim.select($"doc_id", $"simhash", $"band",
         explode(expr(
           """transform(sequence(0, 12), c -> struct(c AS chunk,
@@ -330,7 +319,7 @@ object Dedup {
         $"d1" < $"d2" && expr("bit_count(s1 ^ s2) <= 12"))
       .select($"d1", $"d2")
       .distinct()
-    verifyPairs(cands, docs)
+    verifyPairs(cands, docs).orderBy($"d1", $"d2")
   }
 
   /** Duplicate-cluster assignment — the arbitration step after pair
@@ -351,44 +340,46 @@ object Dedup {
     */
   def q45DupClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables.load(s, dir, "documents").select($"doc_id")
-    // checkpoint: the pair computation is the expensive part and must not
-    // re-run once per propagation round (ccPropagate symmetrizes); the
-    // memoized pair frame means a warm session skips it entirely
-    val edges = nearDupPairs(s, dir).select($"d1", $"d2")
-      .toDF("u", "v").localCheckpoint(true)
-    val labels = Components.ccPropagate(edges)
-    docs.join(labels, Seq("doc_id"), "left")
-      .select($"doc_id", coalesce($"rep", $"doc_id").as("cluster_rep"))
+    dupClusters(s, dir)
       .withColumn("keep", $"cluster_rep" === $"doc_id")
       .orderBy($"doc_id")
   }
 
-  /** q98 — cluster collapse with a QUALITY keeper policy: q45 assigns
-    * clusters and keeps the minimum doc_id; production pipelines keep
-    * the BEST member instead (longest, highest quality score — here:
-    * longest text, doc_id as the deterministic tie-break), because the
-    * survivor is what trains. Same component assignment, one extra
-    * per-cluster argmax window; the policy is the only delta, so q45
-    * and q98 disagreeing on `keep` within a cluster is exactly the
-    * policy's effect, never a clustering difference.
+  /** (doc_id, cluster_rep) for every document: the near-dup pair
+    * graph's components ([[Components.ccPropagate]] over the pair
+    * artifact) left-joined onto the corpus, singletons labelled with
+    * their own id. One [[FamilyCaches]] artifact nested over
+    * [[nearDupPairs]], shared by q45, q98, q228 and q300.
     */
-  def q98BestKeeper(s: SparkSession, dir: String): DataFrame = {
+  private def dupClusters(s: SparkSession, dir: String): DataFrame =
+    FamilyCaches.memo(s, s"dupClusters:$dir") {
+      import s.implicits._
+      val labels = Components.ccPropagate(nearDupPairs(s, dir).select($"d1", $"d2"))
+      Tables.load(s, dir, "documents").select($"doc_id")
+        .join(labels, Seq("doc_id"), "left")
+        .select($"doc_id", coalesce($"rep", $"doc_id").as("cluster_rep"))
+        .localCheckpoint(true)
+    }
+
+  /** The 80/10/10 split keyed by the cluster representative: the md5
+    * bucket idiom of q39 over `salt || cluster_rep`, so every member
+    * of a near-dup cluster lands in the same split. Columns: doc_id,
+    * cluster_rep, bucket, split. q228 and q300 differ only in the salt.
+    */
+  private def clusterSplit(s: SparkSession, dir: String, salt: String): DataFrame = {
     import s.implicits._
-    val docs = Tables.load(s, dir, "documents")
-      .select($"doc_id", length($"text").cast("long").as("quality"))
-    val edges = nearDupPairs(s, dir).select($"d1", $"d2")
-      .toDF("u", "v").localCheckpoint(true)
-    val labels = Components.ccPropagate(edges)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"cluster_rep").orderBy($"quality".desc, $"doc_id")
-    docs.join(labels, Seq("doc_id"), "left")
-      .select($"doc_id", $"quality", coalesce($"rep", $"doc_id").as("cluster_rep"))
-      .withColumn("keep", row_number().over(w) === 1)
-      .orderBy($"doc_id")
+    dupClusters(s, dir)
+      .withColumn("bucket", conv(substring(md5(concat(lit(salt),
+        $"cluster_rep".cast("string"))), 1, 8), 16, 10).cast("long") % 100)
+      .withColumn("split", when($"bucket" < 80, "train").when($"bucket" < 90, "val")
+        .otherwise("test"))
   }
 
-  val q98BestKeeperSql: String =
+  /** The q45 component machinery as a reusable CTE prefix (ends with
+    * the `comp` CTE, no trailing comma) — shared by the q45, q98, q228
+    * and q300 oracles.
+    */
+  private val dupComponentCtes: String =
     s"""WITH RECURSIVE
       |w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
       |sh AS (SELECT doc_id, list_distinct(list_transform(
@@ -409,7 +400,40 @@ object Dedup {
       |  SELECT u, u FROM (SELECT DISTINCT u FROM edges) t
       |  UNION
       |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u),
-      |comp AS (SELECT u AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY u),
+      |comp AS (SELECT u AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY u)""".stripMargin
+
+  /** Same components, stated as a DuckDB recursive CTE over the same
+    * exact-Jaccard pair definition.
+    */
+  val q45DupClustersSql: String =
+    s"""$dupComponentCtes
+      |SELECT d.doc_id, COALESCE(c.cluster_rep, d.doc_id) AS cluster_rep,
+      |       (COALESCE(c.cluster_rep, d.doc_id) = d.doc_id) AS keep
+      |FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
+      |ORDER BY d.doc_id""".stripMargin
+
+  /** q98 — cluster collapse with a QUALITY keeper policy: q45 assigns
+    * clusters and keeps the minimum doc_id; production pipelines keep
+    * the BEST member instead (longest, highest quality score — here:
+    * longest text, doc_id as the deterministic tie-break), because the
+    * survivor is what trains. Same component assignment, one extra
+    * per-cluster argmax window; the policy is the only delta, so q45
+    * and q98 disagreeing on `keep` within a cluster is exactly the
+    * policy's effect, never a clustering difference.
+    */
+  def q98BestKeeper(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"cluster_rep").orderBy($"quality".desc, $"doc_id")
+    Tables.load(s, dir, "documents")
+      .select($"doc_id", length($"text").cast("long").as("quality"))
+      .join(dupClusters(s, dir), "doc_id")
+      .withColumn("keep", row_number().over(w) === 1)
+      .orderBy($"doc_id")
+  }
+
+  val q98BestKeeperSql: String =
+    s"""$dupComponentCtes,
       |q AS (
       |  SELECT d.doc_id, CAST(length(d.text) AS BIGINT) AS quality,
       |    COALESCE(c.cluster_rep, d.doc_id) AS cluster_rep
@@ -438,43 +462,13 @@ object Dedup {
     */
   def q300LeakageSafeSplit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables.load(s, dir, "documents").select($"doc_id")
-    val edges = nearDupPairs(s, dir).select($"d1", $"d2")
-      .toDF("u", "v").localCheckpoint(true)
-    val labels = Components.ccPropagate(edges)
-    docs.join(labels, Seq("doc_id"), "left")
-      .select($"doc_id", coalesce($"rep", $"doc_id").as("cluster_rep"))
-      .withColumn("bucket",
-        conv(substring(md5(concat(lit("clsplit:"), $"cluster_rep".cast("string"))),
-          1, 8), 16, 10).cast("long") % 100)
-      .select($"doc_id", $"cluster_rep",
-        when($"bucket" < 80, "train").when($"bucket" < 90, "val")
-          .otherwise("test").as("split"))
+    clusterSplit(s, dir, "clsplit:")
+      .select($"doc_id", $"cluster_rep", $"split")
       .orderBy($"doc_id")
   }
 
   val q300LeakageSafeSplitSql: String =
-    s"""WITH RECURSIVE
-      |w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |sh AS (SELECT doc_id, list_distinct(list_transform(
-      |         range(1, greatest(len(ws) - 1, 2)),
-      |         i -> array_to_string(ws[i:i+2], ' '))) AS s FROM w),
-      |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-      |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-      |          FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-      |          GROUP BY 1, 2),
-      |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-      |pairs AS (
-      |  SELECT d1, d2
-      |  FROM inter JOIN sz sa ON sa.doc_id = inter.d1
-      |             JOIN sz sb ON sb.doc_id = inter.d2
-      |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= $Tau),
-      |edges AS (SELECT d1 AS u, d2 AS v FROM pairs UNION ALL SELECT d2, d1 FROM pairs),
-      |reach(u, r) AS (
-      |  SELECT u, u FROM (SELECT DISTINCT u FROM edges) t
-      |  UNION
-      |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u),
-      |comp AS (SELECT u AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY u),
+    s"""$dupComponentCtes,
       |asg AS (
       |  SELECT d.doc_id, COALESCE(c.cluster_rep, d.doc_id) AS cluster_rep
       |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
@@ -484,9 +478,6 @@ object Dedup {
       |       ELSE 'test' END AS split
       |FROM asg ORDER BY doc_id""".stripMargin
 
-  /** Same components, stated as a DuckDB recursive CTE over the same
-    * exact-Jaccard pair definition.
-    */
   /** Edit distance over the duplicate pairs — the character-level
     * refinement of the near-dup verdict (Jaccard says HOW MUCH shingle
     * overlap; Levenshtein says how few edits separate the texts, the
@@ -538,7 +529,7 @@ object Dedup {
     */
   def q72BfsDepth(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pairs = nearDupPairs(s, dir).select($"d1", $"d2").localCheckpoint(true)
+    val pairs = nearDupPairs(s, dir).select($"d1", $"d2")
     val src = pairs.agg(min($"d1")).collect()(0)
     if (src.isNullAt(0)) // no duplicate pairs at this scale: empty result
       return Seq.empty[(Long, Long)].toDF("doc_id", "dist")
@@ -574,40 +565,6 @@ object Dedup {
       |FROM bfs WHERE node IS NOT NULL
       |GROUP BY node ORDER BY doc_id""".stripMargin
 
-  /** The q45 component machinery as a reusable CTE prefix (ends with
-    * the `comp` CTE, no trailing comma) — shared by the q45 oracle and
-    * the q228 cluster-aware split oracle.
-    */
-  private val dupComponentCtes: String =
-    s"""WITH RECURSIVE
-      |w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |sh AS (SELECT doc_id, list_distinct(list_transform(
-      |         range(1, greatest(len(ws) - 1, 2)),
-      |         i -> array_to_string(ws[i:i+2], ' '))) AS s FROM w),
-      |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-      |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-      |          FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-      |          GROUP BY 1, 2),
-      |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-      |pairs AS (
-      |  SELECT d1, d2
-      |  FROM inter JOIN sz sa ON sa.doc_id = inter.d1
-      |             JOIN sz sb ON sb.doc_id = inter.d2
-      |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= $Tau),
-      |edges AS (SELECT d1 AS u, d2 AS v FROM pairs UNION ALL SELECT d2, d1 FROM pairs),
-      |reach(u, r) AS (
-      |  SELECT u, u FROM (SELECT DISTINCT u FROM edges) t
-      |  UNION
-      |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u),
-      |comp AS (SELECT u AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY u)""".stripMargin
-
-  val q45DupClustersSql: String =
-    s"""$dupComponentCtes
-      |SELECT d.doc_id, COALESCE(c.cluster_rep, d.doc_id) AS cluster_rep,
-      |       (COALESCE(c.cluster_rep, d.doc_id) = d.doc_id) AS keep
-      |FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-      |ORDER BY d.doc_id""".stripMargin
-
   /** q94 — local graph structure of the near-dup pair graph: per-node
     * degree, wedge count (open triads), triangle count, and local
     * clustering coefficient. The density diagnostic that separates
@@ -620,7 +577,7 @@ object Dedup {
     */
   def q94Triangles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pairs = nearDupPairs(s, dir).select($"d1", $"d2").localCheckpoint(true)
+    val pairs = nearDupPairs(s, dir).select($"d1", $"d2")
     val deg = pairs.select($"d1".as("node")).unionAll(pairs.select($"d2".as("node")))
       .groupBy($"node").agg(count(lit(1)).as("degree"))
     val tri = pairs.as("p1")
@@ -789,23 +746,9 @@ object Dedup {
     graft.GraftExtensions.register(s)
     val ws = Tables.load(s, dir, "documents")
       .select($"doc_id", $"text", split($"text", " ").as("ws"))
-      .cache() // feeds the gram lane and the token-reassembly lane
-    // L-grams via the native word_ngrams scan (r15), md5-keyed: the
-    // hash bytes are identical to md5(concat_ws(' ', slice(...)))
-    // because the gram IS that joined string. r16: unhex packs the
-    // 32-char hex into the 16 BYTES the scale note always promised —
-    // half the shuffled key bytes, identical collision structure
-    // (unhex∘md5 is injective on md5 output), h never reaches output
-    val grams = ws
-      .select($"doc_id",
-        posexplode(call_function("word_ngrams", $"text", lit(L))).as(Seq("p", "g")))
-      .select($"doc_id", $"p".cast("long").as("pos"), unhex(md5($"g")).as("h"))
-    val cw = Window.partitionBy($"h")
-    val seeds = grams
-      .withColumn("cnt", count(lit(1)).over(cw))
-      .filter($"cnt" >= 2)
-      .select($"doc_id", $"pos")
-      .cache() // rare rows; feed the interval merge and the cover explode
+      .localCheckpoint(true) // feeds the gram lane and the token-reassembly lane
+    // rare rows; feed the interval merge and the cover explode
+    val seeds = substrSeeds(ws, L).localCheckpoint(true)
     val dw = Window.partitionBy($"doc_id").orderBy($"pos")
     val regions = seeds
       .withColumn("b",
@@ -839,6 +782,26 @@ object Dedup {
         coalesce($"n_removed", lit(0L)).as("n_removed"),
         coalesce($"text_clean", array_join($"ws", " ")).as("text_clean"))
       .orderBy($"doc_id")
+  }
+
+  /** q230's seed rows (doc_id, pos): the start of every L-gram that
+    * occurs at least twice in the corpus. Lazy, so PlanAuditSpec can
+    * audit the gram-hash window that q230 checkpoints away.
+    */
+  private[queries] def substrSeeds(ws: DataFrame, L: Int): DataFrame = {
+    import ws.sparkSession.implicits._
+    // L-grams via the native word_ngrams scan (r15), md5-keyed: the
+    // hash bytes are identical to md5(concat_ws(' ', slice(...)))
+    // because the gram IS that joined string. r16: unhex packs the
+    // 32-char hex into the 16 BYTES the scale note always promised —
+    // half the shuffled key bytes, identical collision structure
+    // (unhex∘md5 is injective on md5 output), h never reaches output
+    ws.select($"doc_id",
+        posexplode(call_function("word_ngrams", $"text", lit(L))).as(Seq("p", "g")))
+      .select($"doc_id", $"p".cast("long").as("pos"), unhex(md5($"g")).as("h"))
+      .withColumn("cnt", count(lit(1)).over(Window.partitionBy($"h")))
+      .filter($"cnt" >= 2)
+      .select($"doc_id", $"pos")
   }
 
   /** q246: cross-split SUBSTRING contamination — the strict
@@ -1072,7 +1035,7 @@ object Dedup {
     val cands = prefix.as("a").join(prefix.as("b"),
         $"a.g" === $"b.g" && $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("d1"), $"b.doc_id".as("d2")).distinct()
-    verifyPairs(cands, docs)
+    verifyPairs(cands, docs).orderBy($"d1", $"d2")
   }
 
   /** q135: containment (subset-similarity) join — ordered pairs where
@@ -1186,6 +1149,24 @@ object Dedup {
   def q148SortedNeighborhood(s: SparkSession, dir: String,
       w: Int = 10, parts: Int = 32): DataFrame = {
     import s.implicits._
+    snmPairs(s, dir, w, parts).orderBy($"d1", $"d2")
+  }
+
+  /** q148's verified pairs (d1, d2, jac), one [[FamilyCaches]] artifact
+    * per (w, parts, dir): q148 emits it and q223 counts it.
+    */
+  private def snmPairs(s: SparkSession, dir: String, w: Int, parts: Int): DataFrame =
+    FamilyCaches.memo(s, s"snmPairs:$w:$parts:$dir") {
+      q148SnmFrame(s, dir, w, parts).localCheckpoint(true)
+    }
+
+  /** The lazy SNM pipeline behind [[snmPairs]]: the keyed, rank and
+    * signature frames are eager checkpoints, the rank-band join and the
+    * verify are not — PlanAuditSpec audits the join on this frame.
+    */
+  private[graft] def q148SnmFrame(s: SparkSession, dir: String,
+      w: Int, parts: Int): DataFrame = {
+    import s.implicits._
     val W = org.apache.spark.sql.expressions.Window
     val docs = shingled(s, dir)
     val keyed = Tables.load(s, dir, "documents")
@@ -1203,14 +1184,14 @@ object Dedup {
       .localCheckpoint(true)
     val (ranged, offsets) =
       Prefix.boundedPrefix(keyed, parts, lit(1L), $"k".asc, $"doc_id".asc)
-    // scratch-cached: lower AND upper probe this frame — uncached, the
-    // key extraction (an interpreted string-shingle lambda) and the
+    // checkpointed: lower AND upper probe this frame — otherwise the
     // rank assembly would execute once per branch
-    val ranked = cacheScratch(s, "q148_rank", ranged
+    val ranked = ranged
       .withColumn("rn", row_number().over(
         W.partitionBy($"pid").orderBy($"k", $"doc_id")))
       .join(broadcast(offsets), "pid")
-      .select($"doc_id", ($"rn" + $"off").as("r")))
+      .select($"doc_id", ($"rn" + $"off").as("r"))
+      .localCheckpoint(true)
     val lower = ranked.select($"doc_id".as("id_a"), $"r".as("ra"),
       explode(array(expr(s"(r - 1) div $w"), expr(s"(r - 1) div $w + 1")))
         .as("bkt"))
@@ -1228,8 +1209,7 @@ object Dedup {
     //    P[reject a true τ=0.8 pair] ≈ P[Binom(64, 0.8) < 19] ≈ 1e-22,
     //    noise next to SNM's own window-miss probability.
     val sz = docs.select($"doc_id", size($"sh").as("n"))
-    val sig = cacheScratch(s, "q148_sig", docs.select($"doc_id",
-      call_function("minhash_signature", $"sh").as("sig")))
+    val sig = minhashSigs(docs).localCheckpoint(true)
     val filtered = cands
       .join(sz.as("za"), $"d1" === $"za.doc_id")
       .join(sz.as("zb"), $"d2" === $"zb.doc_id")
@@ -1294,10 +1274,9 @@ object Dedup {
     * same exact-Jaccard verify); the candidate count for a width-w
     * rank band is the CLOSED FORM n·w − w(w+1)/2 — no extra join runs
     * just to count candidates. One row; every count is an aggregate,
-    * nothing collects. The shingle and pair artifacts are shared with
-    * the family, but the found set re-runs q148's whole pipeline (its
-    * rank and signature frames are per-invocation scratch), so q223
-    * costs about one q148 run plus the counts.
+    * nothing collects. The true set is the family's pair artifact and
+    * the found set is q148's SNM pair artifact, so after q148 has run
+    * in the session q223 costs only the counts.
     */
   def q223BlockingEval(s: SparkSession, dir: String, w: Int = 10): DataFrame = {
     import s.implicits._
@@ -1403,15 +1382,7 @@ object Dedup {
     */
   def q228ClusterSplit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val clusters = q45DupClusters(s, dir).select($"doc_id", $"cluster_rep")
-    val bucket = (conv(substring(md5(concat(lit("split:"),
-      $"cluster_rep".cast("string"))), 1, 8), 16, 10).cast("long") % 100)
-      .as("bucket")
-    clusters.select($"doc_id", $"cluster_rep", bucket)
-      .select($"doc_id", $"cluster_rep", $"bucket",
-        when($"bucket" < 80, "train").when($"bucket" < 90, "val")
-          .otherwise("test").as("split"))
-      .orderBy($"doc_id")
+    clusterSplit(s, dir, "split:").orderBy($"doc_id")
   }
 
   /** q286: duplicate-SEGMENT removal with document reconstruction —
@@ -1464,19 +1435,28 @@ object Dedup {
     // ≥100k-segment document and corrupt keeper selection — the
     // struct min has no bounds at all.)
     val byHash = org.apache.spark.sql.expressions.Window.partitionBy($"h")
-    seg.withColumn("wk", min(struct($"doc_id", $"seg_no")).over(byHash))
+    reassembleSegments(seg
+      .withColumn("wk", min(struct($"doc_id", $"seg_no")).over(byHash))
       .select($"doc_id", $"seg_no", $"s",
-        ($"doc_id" === $"wk.doc_id" && $"seg_no" === $"wk.seg_no").as("keep"))
-      .groupBy($"doc_id")
-      .agg(
-        count(lit(1)).as("n_segments"),
-        sum(when($"keep", 1L).otherwise(0L)).as("n_kept"),
-        array_join(
-          transform(
-            array_sort(collect_list(when($"keep", struct($"seg_no", $"s")))),
-            x => x.getField("s")), " ").as("clean_text"))
+        ($"doc_id" === $"wk.doc_id" && $"seg_no" === $"wk.seg_no").as("keep")))
       .orderBy($"doc_id")
   }
+
+  /** Fold per-segment keep verdicts (doc_id, seg_no, s, keep) back into
+    * cleaned documents: one doc-keyed aggregate. q286's reassembly, and
+    * per micro-batch its streaming twin's
+    * ([[graft.streaming.EventStreams.streamSegmentDedupToParquet]]).
+    */
+  def reassembleSegments(segments: DataFrame): DataFrame =
+    segments.groupBy(col("doc_id"))
+      .agg(
+        count(lit(1)).as("n_segments"),
+        sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
+        array_join(
+          transform(
+            array_sort(collect_list(when(col("keep"),
+              struct(col("seg_no"), col("s"))))),
+            x => x.getField("s")), " ").as("clean_text"))
 
   def q286SegmentDedupSql(w: Int = 16): String =
     s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),

@@ -7,18 +7,19 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.graft.PlanShim
 
 /** The one registry for artifacts shared across queries of a session:
-  * the dedup shingle frame, rarity ranks and exact pair table, the
-  * unigram/WordPiece/KN-4 training frames, the CT language-ID
+  * the dedup shingle frame, rarity ranks, exact pair table, cluster
+  * labels (`dupClusters`) and sorted-neighbourhood pairs (`snmPairs`),
+  * the unigram/WordPiece/KN-4 training frames, the CT language-ID
   * artifacts, the contamination and interval-overlap pair tables, the
   * q271/q284 replay directories and the q52 IVF index.
   *
   * An artifact is memoized per (session, key) and owns what it pins:
   * the persistent RDDs its frames read (recorded on build through
   * [[PlanShim.checkpointRdds]]) and, for on-disk artifacts, its temp
-  * directory. Builds nest (`rarityRanked` reads `shingled`); an RDD
-  * belongs to the innermost entry that claimed it. A failed build
-  * leaves no entry, and entries of stopped sessions are evicted on
-  * access.
+  * directory. Builds nest (`rarityRanked` reads `shingled`,
+  * `dupClusters` reads `nearDupPairs`); an RDD belongs to the
+  * innermost entry that claimed it. A failed build leaves no entry,
+  * and entries of stopped sessions are evicted on access.
   *
   * Release has two rules. Per query, [[sweep]] unpersists every
   * persistent RDD the query created that no artifact owns, so

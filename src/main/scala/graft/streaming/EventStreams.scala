@@ -674,7 +674,8 @@ object EventStreams {
     * segments, and every segment probes a PERSISTED first-occurrence
     * index (md5(segment) → flag in `transformWithState` RocksDB state —
     * never the text) AT ARRIVAL. Output is one row per segment
-    * instance (doc_id, seg_no, s, keep); [[reassembleSegments]] folds a
+    * instance (doc_id, seg_no, s, keep); q286's
+    * [[graft.queries.Dedup.reassembleSegments]] folds a
     * micro-batch of these back into cleaned documents — documents
     * arrive whole, so reconstruction is batch-local and rides
     * foreachBatch ([[streamSegmentDedupToParquet]] is the composed
@@ -712,22 +713,6 @@ object EventStreams {
       .toDF("doc_id", "seg_no", "s", "keep")
   }
 
-  /** Fold per-segment keep verdicts back into cleaned documents —
-    * q286's reassembly aggregate, applied per micro-batch (documents
-    * arrive whole, so this is batch-local: one doc-keyed aggregate,
-    * no streaming state).
-    */
-  def reassembleSegments(segments: DataFrame): DataFrame =
-    segments.groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_segments"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-        array_join(
-          transform(
-            array_sort(collect_list(when(col("keep"),
-              struct(col("seg_no"), col("s"))))),
-            x => x.getField("s")), " ").as("clean_text"))
-
   /** The composed end-to-end query: stream in documents, dedup
     * segments against the persisted index, land cleaned documents as
     * parquet — reconstruction inside foreachBatch, so a batch commits
@@ -738,7 +723,8 @@ object EventStreams {
     streamingSegmentDedup(docs, w).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        reassembleSegments(batch.toDF()).write.mode("append").parquet(outPath)
+        graft.queries.Dedup.reassembleSegments(batch.toDF())
+          .write.mode("append").parquet(outPath)
       }
       .start()
 

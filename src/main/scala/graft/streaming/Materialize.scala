@@ -59,7 +59,8 @@ import graft.model.Op
   * checkpoint's at-least-once redelivery composes to exactly-once
   * replica state — same argument as the reference's ACK-after-flush
   * (`/root/reference/connector.go` checkpoint discipline), shifted from
-  * Kafka offsets to table state.
+  * Kafka offsets to table state. The incrementally maintained views do
+  * NOT inherit it under a crash: see [[applyStreamWithView]].
   */
 object Materialize {
 
@@ -292,6 +293,14 @@ object Materialize {
     * each batch's change feed drives [[applyAggregateDelta]] after the
     * replica merge, keeping `SELECT grp, count(*), sum(m) GROUP BY grp`
     * continuously current without ever rescanning the replica.
+    *
+    * The view is exactly-once only while every batch completes both
+    * writes. The view write runs AFTER the replica overwrite; if the
+    * process dies between the two, the redelivered batch finds the
+    * replica already merged, its change feed nets to before == after
+    * and cancels, and the view misses that batch for good. The same
+    * holds for [[applyStreamWithMinMaxView]] and
+    * [[applyStreamWithMomentsView]].
     */
   def applyStreamWithView(events: DataFrame, keyField: String, tablePath: String,
       aggPath: String, groupField: String, measureField: String,
@@ -316,8 +325,11 @@ object Materialize {
     * and `after` (its live row now, null if deleted). Keys where the
     * incoming change LOST the merge (stale out-of-order data, redelivered
     * deletes) emit nothing; a redelivered upsert emits before == after,
-    * which cancels in any delta consumer — so downstream incremental
-    * views inherit the replica's exactly-once effect. This is the feed
+    * which cancels in any delta consumer. A view fed from this feed
+    * therefore counts a batch exactly once only if the batch's FIRST
+    * delivery reached the view; a crash after the replica write but
+    * before the view write loses the batch for the view (see
+    * [[applyStreamWithView]]). This is the feed
     * that makes the replica a SOURCE: incremental aggregate maintenance
     * ([[applyAggregateDelta]]), audit trails, downstream CDC fan-out.
     */
@@ -577,8 +589,11 @@ object Materialize {
     * sum(m) FROM replica GROUP BY grp` over the full table, each batch
     * applies only its NET deltas (−before, +after per changed key).
     * Because [[applyBatchCdf]] emits before == after for redelivered
-    * changes and nothing for merge losers, the deltas cancel exactly and
-    * the view inherits exactly-once semantics. The view table is
+    * changes and nothing for merge losers, a redelivered batch whose
+    * first delivery reached the view adds nothing. That is not
+    * exactly-once under a crash: a batch whose replica write completed
+    * but whose view write did not is lost for the view (the window
+    * [[applyStreamWithView]] describes). The view table is
     * output-sized (one row per group); at a group cardinality where the
     * full rewrite matters, shard it with the replica's bucket pattern.
     */
@@ -713,9 +728,11 @@ object Materialize {
     * buckets) × (bucket size), independent of table size, the same
     * shape as the replica merge itself. Storage is one (grp, v) pair
     * per distinct live value — bounded by the replica, typically far
-    * smaller. Exactness under at-least-once redelivery is inherited
-    * from the feed ([[applyBatchCdf]]); TRUNCATE retractions flow
-    * through the same deltas, emptying the view.
+    * smaller. Redelivery of a batch that already reached the index is
+    * a no-op through the feed ([[applyBatchCdf]]), with the same crash
+    * window between the replica and view writes as
+    * [[applyStreamWithView]]; TRUNCATE retractions flow through the
+    * same deltas, emptying the view.
     */
   def applyMinMaxDelta(changes: DataFrame, groupField: String,
       measureField: String, indexPath: String, viewPath: String,
@@ -805,7 +822,8 @@ object Materialize {
   }
 
   /** Replica + incrementally-maintained min/max view in one stream —
-    * [[applyStreamWithView]]'s non-subtractable sibling.
+    * [[applyStreamWithView]]'s non-subtractable sibling, with the same
+    * crash window between the replica and view writes.
     */
   def applyStreamWithMinMaxView(events: DataFrame, keyField: String,
       tablePath: String, indexPath: String, viewPath: String,
@@ -826,7 +844,8 @@ object Materialize {
 
   /** Streamed CDC apply + per-batch exact moments maintenance —
     * [[applyStreamWithView]] with the (n, Σv, Σv²) table, for the
-    * continuously-served mean/variance view ([[momentsView]]).
+    * continuously-served mean/variance view ([[momentsView]]), and the
+    * same crash window between the replica and view writes.
     */
   def applyStreamWithMomentsView(events: DataFrame, keyField: String,
       tablePath: String, aggPath: String,

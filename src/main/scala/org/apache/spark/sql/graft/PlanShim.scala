@@ -29,4 +29,10 @@ object PlanShim {
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
+
+  /** The number of frames registered in the session's `CacheManager`
+    * (`Dataset.cache`/`persist`); `sharedState` is `private[sql]`.
+    */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[CSparkSession].sharedState.cacheManager.numCachedEntries
 }

@@ -71,7 +71,9 @@ class FamilyCachesSpec extends SparkSpec {
           s"the sweep after $name unpersisted the pair artifact")
         FamilyCaches.buildCount - b0
       }
-    assert(builds.head > 0 && builds.tail.forall(_ == 0), s"builds per query: $builds")
+    // q223 builds the shingles, the pairs and the SNM pairs; q300
+    // builds only the cluster labels over the existing pairs
+    assert(builds == Seq(3, 0, 1), s"builds per query: $builds")
   }
 
   test("{q223, q227, q40} in two orders: same rows, same builds") {
@@ -84,8 +86,29 @@ class FamilyCachesSpec extends SparkSpec {
     val (r1, b1) = session(Seq("q223_blocking_eval", "q227_split_leakage", "q40_ngram_jaccard"))
     val (r2, b2) = session(Seq("q40_ngram_jaccard", "q227_split_leakage", "q223_blocking_eval"))
     assert(r1 == r2)
-    // the shingle frame and the pair table, once each
-    assert(b1 == 2 && b2 == 2, s"builds: $b1 vs $b2")
+    // the shingle frame, the pair table and q223's SNM pairs, once each
+    assert(b1 == 3 && b2 == 3, s"builds: $b1 vs $b2")
+  }
+
+  test("{q45, q98, q300, q228} in two orders: same rows, cluster labels built once") {
+    def session(order: Seq[String]): (Map[String, Seq[String]], Seq[Long]) = {
+      FamilyCaches.clear(spark)
+      val runs = order.map { n =>
+        val b0 = FamilyCaches.buildCount
+        val rows = runSwept(n, dir01).map(_.toString).sorted
+        (n -> rows, FamilyCaches.buildCount - b0)
+      }
+      assert(FamilyCaches.keys(spark).contains(s"dupClusters:$dir01"))
+      (runs.map(_._1).toMap, runs.map(_._2))
+    }
+    val (r1, b1) = session(Seq("q45_dup_clusters", "q98_best_keeper",
+      "q300_leakage_safe_split", "q228_cluster_split"))
+    val (r2, b2) = session(Seq("q228_cluster_split", "q300_leakage_safe_split",
+      "q98_best_keeper", "q45_dup_clusters"))
+    assert(r1 == r2)
+    // the first query builds the shingles, the pairs and the labels;
+    // the other three read them
+    assert(b1 == Seq(3, 0, 0, 0) && b2 == Seq(3, 0, 0, 0), s"builds: $b1 vs $b2")
   }
 
   test("nested builds: every RDD has one owner") {

@@ -45,10 +45,15 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q41: signatures come from the native expression, not an aggregation") {
     // the native minhash_signature expression must ride the scan/project,
-    // not an explode + 64-buffer hash-aggregate (the round-2 formulation)
+    // not an explode + 64-buffer hash-aggregate (the round-2 formulation).
+    // q41 checkpoints its signatures, so the expression is audited on
+    // the shared lazy builder
+    val sigs = Dedup.minhashSigs(Dedup.shingled(spark, dir))
+      .queryExecution.optimizedPlan.toString()
+    assert(sigs.contains("minhash_signature"), s"expected native signature expr:\n$sigs")
+    assert(!sigs.contains("min(xxhash64"), s"round-2 aggregate formulation resurfaced:\n$sigs")
     val q = graft.SparkEntry.queries("q41_minhash_lsh")(spark, dir)
     val logical = q.queryExecution.optimizedPlan.toString()
-    assert(logical.contains("minhash_signature"), s"expected native signature expr:\n$logical")
     assert(!logical.contains("min(xxhash64"), s"round-2 aggregate formulation resurfaced:\n$logical")
   }
 
@@ -468,8 +473,12 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q148: the rank-band join is a bucket equijoin — never quadratic") {
     // SNM's whole point is comparing only window neighbors; a cartesian
-    // or nested-loop means the bucket key stopped reaching the join
-    val p = plan("q148_snm")
+    // or nested-loop means the bucket key stopped reaching the join.
+    // q148 reads a checkpointed artifact, so the audit runs on the lazy
+    // frame behind it
+    val df = Dedup.q148SnmFrame(spark, dir, w = 10, parts = 32)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString()
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoopJoin"),
       s"rank-band join must not go quadratic:\n$p")
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
@@ -629,11 +638,17 @@ class PlanAuditSpec extends SparkSpec {
   test("q230: every window is keyed (gram-hash / doc_id) and no join is a nested loop") {
     val df = graft.SparkEntry.queries("q230_substr_dedup")(spark, dir)
     df.collect()
-    val windows = df.queryExecution.optimizedPlan.collect {
+    // q230 checkpoints its seed rows, so the dup-count window is
+    // audited on the lazy seed builder and the island windows on q230
+    val seeds = Dedup.substrSeeds(
+      graft.sources.Tables.load(spark, dir, "documents"), Dedup.SubstrL)
+    def windowsOf(d: org.apache.spark.sql.DataFrame) = d.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
-    assert(windows.nonEmpty, "expected the dup-count and island windows")
-    assert(windows.forall(_.partitionSpec.nonEmpty),
-      s"q230 must never run a global window:\n${df.queryExecution.optimizedPlan}")
+    assert(windowsOf(seeds).nonEmpty && windowsOf(df).nonEmpty,
+      "expected the dup-count and island windows")
+    assert((windowsOf(seeds) ++ windowsOf(df)).forall(_.partitionSpec.nonEmpty),
+      s"q230 must never run a global window:\n${seeds.queryExecution.optimizedPlan}\n" +
+        s"${df.queryExecution.optimizedPlan}")
     val p = df.queryExecution.executedPlan.toString()
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"q230 joins must all be equijoins:\n$p")

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.{BinaryType, IntegerType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType}
 
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
-import graft.functions.{BlocklistHits, BloomMightContain, CharNgrams, CosineSimilarity, DamerauLevenshtein, DlSignatures, DotProduct, Fnv1a32, JaroWinkler, MapDropKey, MapMaskKeys, MapSetKey, MinHashSignature, MinShingleMd5, OrderedFold, PqAdc, PqEncode, PqLut, SimHash64, SlotAgreement, Sq8Cos, Sq8Encode, SrpBucket, WordShingleHashes}
+import graft.functions.{BlocklistHits, BloomMightContain, CharNgrams, CosineSimilarity, DamerauLevenshtein, DlSignatures, DotProduct, FlatJson, Fnv1a32, JaroWinkler, MapMaskKeys, MinHashSignature, MinShingleMd5, OrderedFold, PqAdc, PqEncode, PqLut, RowImage, SimHash64, SlotAgreement, Sq8Cos, Sq8Encode, SrpBucket, WordShingleHashes}
 
 /** Engine extensions, installed via
   * `spark.sql.extensions=graft.GraftExtensions` or
@@ -78,10 +78,18 @@ object GraftExtensions {
       arity(2, "slot_agreement")(a => SlotAgreement(a.head, a(1)))),
     ("fnv1a32", Fnv1a32.info,
       arity(1, "fnv1a32")(a => Fnv1a32(a.head))),
-    ("map_drop_key", MapDropKey.info,
-      arity(2, "map_drop_key")(a => MapDropKey(a.head, a(1)))),
-    ("map_set_key", MapSetKey.info,
-      arity(3, "map_set_key")(a => MapSetKey(a.head, a(1), a(2)))),
+    ("flat_json", FlatJson.info,
+      arity(3, "flat_json")(a => FlatJson(a.head, a(1), a(2)))),
+    ("row_image", RowImage.info, args => {
+      require(args.length % 2 == 0, "row_image takes key/value pairs")
+      val pairs = args.grouped(2).toSeq
+      RowImage(pairs.map {
+        case Seq(Literal(k: org.apache.spark.unsafe.types.UTF8String, StringType), _) =>
+          k.toString
+        case Seq(other, _) => throw new IllegalArgumentException(
+          s"row_image: keys must be non-null string literals, got $other")
+      }, pairs.map(_(1)))
+    }),
     ("map_mask_keys", MapMaskKeys.info,
       arity(3, "map_mask_keys")(a => MapMaskKeys(a.head, a(1), a(2)))),
     ("min_shingle_md5", MinShingleMd5.info, args => {

@@ -117,9 +117,14 @@ object Dedup {
       .select(col("d1"), col("d2"), col("jac"))
   }
 
-  /** The one oracle shared by q40/q41/q42: ground-truth exact-Jaccard pairs. */
-  val nearDupPairsSql: String =
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+  /** The exact-pair CTE chain the pair oracles share (no WITH, no
+    * trailing comma): each document's distinct word 3-shingles `s`
+    * (`sh`), the shared-shingle count `inter` of every pair d1 < d2, and
+    * each document's shingle count `n` (`sz`). Defined above its users:
+    * an object's vals initialize in order.
+    */
+  private val exactPairCtes: String =
+    """w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
       |sh AS (SELECT doc_id, list_distinct(list_transform(
       |         range(1, greatest(len(ws) - 1, 2)),
       |         i -> array_to_string(ws[i:i+2], ' '))) AS s FROM w),
@@ -127,7 +132,11 @@ object Dedup {
       |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
       |          FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
       |          GROUP BY 1, 2),
-      |sz AS (SELECT doc_id, len(s) AS n FROM sh)
+      |sz AS (SELECT doc_id, len(s) AS n FROM sh)""".stripMargin
+
+  /** The one oracle shared by q40/q41/q42: ground-truth exact-Jaccard pairs. */
+  val nearDupPairsSql: String =
+    s"""WITH $exactPairCtes
       |SELECT d1, d2, CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jac
       |FROM inter JOIN sz sa ON sa.doc_id = inter.d1
       |           JOIN sz sb ON sb.doc_id = inter.d2
@@ -381,15 +390,7 @@ object Dedup {
     */
   private val dupComponentCtes: String =
     s"""WITH RECURSIVE
-      |w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |sh AS (SELECT doc_id, list_distinct(list_transform(
-      |         range(1, greatest(len(ws) - 1, 2)),
-      |         i -> array_to_string(ws[i:i+2], ' '))) AS s FROM w),
-      |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-      |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-      |          FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-      |          GROUP BY 1, 2),
-      |sz AS (SELECT doc_id, len(s) AS n FROM sh),
+      |$exactPairCtes,
       |pairs AS (
       |  SELECT d1, d2
       |  FROM inter JOIN sz sa ON sa.doc_id = inter.d1
@@ -500,15 +501,7 @@ object Dedup {
   }
 
   val q75EditDistanceSql: String =
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |sh AS (SELECT doc_id, list_distinct(list_transform(
-      |         range(1, greatest(len(ws) - 1, 2)),
-      |         i -> array_to_string(ws[i:i+2], ' '))) AS s FROM w),
-      |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-      |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-      |          FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-      |          GROUP BY 1, 2),
-      |sz AS (SELECT doc_id, len(s) AS n FROM sh),
+    s"""WITH $exactPairCtes,
       |pairs AS (
       |  SELECT d1, d2
       |  FROM inter JOIN sz sa ON sa.doc_id = inter.d1
@@ -540,15 +533,7 @@ object Dedup {
 
   val q72BfsDepthSql: String =
     s"""WITH RECURSIVE
-      |w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |sh AS (SELECT doc_id, list_distinct(list_transform(
-      |         range(1, greatest(len(ws) - 1, 2)),
-      |         i -> array_to_string(ws[i:i+2], ' '))) AS s FROM w),
-      |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-      |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-      |          FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-      |          GROUP BY 1, 2),
-      |sz AS (SELECT doc_id, len(s) AS n FROM sh),
+      |$exactPairCtes,
       |pairs AS (
       |  SELECT d1, d2
       |  FROM inter JOIN sz sa ON sa.doc_id = inter.d1
@@ -598,15 +583,7 @@ object Dedup {
   }
 
   val q94TrianglesSql: String =
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |sh AS (SELECT doc_id, list_distinct(list_transform(
-      |         range(1, greatest(len(ws) - 1, 2)),
-      |         i -> array_to_string(ws[i:i+2], ' '))) AS s FROM w),
-      |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-      |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-      |          FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-      |          GROUP BY 1, 2),
-      |sz AS (SELECT doc_id, len(s) AS n FROM sh),
+    s"""WITH $exactPairCtes,
       |pairs AS (
       |  SELECT d1, d2
       |  FROM inter JOIN sz sa ON sa.doc_id = inter.d1
@@ -1105,15 +1082,7 @@ object Dedup {
   }
 
   val q138SourceOverlapSql: String =
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |sh AS (SELECT doc_id, list_distinct(list_transform(
-      |         range(1, greatest(len(ws) - 1, 2)),
-      |         i -> array_to_string(ws[i:i+2], ' '))) AS s FROM w),
-      |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-      |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-      |          FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-      |          GROUP BY 1, 2),
-      |sz AS (SELECT doc_id, len(s) AS n FROM sh),
+    s"""WITH $exactPairCtes,
       |p AS (SELECT d1, d2
       |      FROM inter JOIN sz sa ON sa.doc_id = inter.d1
       |                 JOIN sz sb ON sb.doc_id = inter.d2

@@ -43,16 +43,20 @@ object SnapshotSource {
     * JDBC and streaming snapshot lanes): every column stringified into
     * `newData`. `eventTime` is the query's (or micro-batch's)
     * `current_timestamp()`, kept out of the generated code's text so
-    * every snapshot query of one shape reuses one compiled stage.
+    * every snapshot query of one shape reuses one compiled stage. The
+    * image is `row_image` ([[graft.functions.RowImage]]), the same map
+    * as `map(kvs)` without its per-row duplicate-key check: the keys
+    * are the column names, checked once when the plan is built.
     */
   def asSnapshotEvents(df: DataFrame, table: String, namespace: String): DataFrame = {
+    graft.GraftExtensions.register(df.sparkSession)
     val kvs = df.columns.toIndexedSeq.flatMap(c => Seq(lit(c), col(c).cast("string")))
     df.select(
       QueryConstant.currentTimestamp.as("eventTime"),
       lit(namespace).as("tableNamespace"),
       lit(table).as("tableName"),
       lit(null).cast("map<string,string>").as("oldData"),
-      map(kvs: _*).as("newData"),
+      call_function("row_image", kvs: _*).as("newData"),
       lit(Op.Snapshot).as("op"))
   }
 

@@ -103,8 +103,9 @@ object CdcPipeline {
     * metrics ride as fused codegen'd accumulator bumps: it attaches
     * PRE-handler, so records the handler's filters silently drop surface
     * as quality counters, and post-handler for the per-topic success
-    * counts. The probe costs less than perfbench's ablation can resolve
-    * (0.1 s, IQR 0.2 s, of a 1.9 s snapshot pass); the ~0.8 s once
+    * counts. The probe costs less than perfbench's prefix ablation can
+    * resolve: `streaming.probe_s` reads between −0.07 and 0.14 s on a
+    * 1.5–2.3 s `snapshot_kafka` pass (4-core host). The ~0.8 s once
     * charged to it was a per-query recompile of the stage, caused by the
     * snapshot's folded `eventTime` literal in the generated code (see
     * [[graft.functions.QueryConstant]]). `None` is the uninstrumented

@@ -385,7 +385,7 @@ final class TopicCountAccumulator extends AccumulatorV2[String, Map[String, Long
   * non-deterministic so the optimizer neither folds it away, nor
   * collapses it into a consumer projection (which would duplicate the
   * side effect per use), nor pushes a filter below it. Codegen is one
-  * helper call per row — the MapDropKey pattern — so the stage stays
+  * helper call per row — the Fnv1a32/FlatJson pattern — so the stage stays
   * whole-stage-fused.
   */
 case class PipelineProbeExpr(children: Seq[Expression], probe: PipelineProbe)

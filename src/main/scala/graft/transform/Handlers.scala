@@ -93,19 +93,17 @@ object Handlers {
       .select(carried ++ Seq(
         col("topic"),
         element_at(img, keyField).cast("binary").as("key"),
-        // reference map-insert overwrite semantics for a source column
-        // literally named "operation" (Spark's map_concat under
-        // mapKeyDedupPolicy=EXCEPTION would throw on the duplicate).
-        // One fused native expression, not map_filter (a CodegenFallback
-        // lambda kicks the whole projection out of whole-stage codegen,
-        // measured ~2x) and not map_concat∘map_drop_key (the concat
-        // re-copies the image the drop just scanned, measured ~25% of
-        // the lane): one scan, one exactly-sized copy per row. A
-        // truncate may carry a null image — coalesced to {} so its
-        // record still serializes as {"operation":"TRUNCATE",...}.
-        to_json(call_function("map_set_key",
+        // The value is one native pass from the image to its JSON bytes
+        // ([[graft.functions.FlatJson]]): any source column literally
+        // named "operation" is dropped and the op appended last
+        // (reference map-insert overwrite semantics), byte-identical to
+        // `to_json` over that map, with no map copy, no Jackson `String`
+        // and no second byte copy. A truncate may carry a null image —
+        // coalesced to {} so its record still serializes as
+        // {"operation":"TRUNCATE"}.
+        call_function("flat_json",
           if (emitTruncates) coalesce(img, map().cast("map<string,string>")) else img,
-          lit("operation"), col("op"))).cast("binary").as("value"),
+          lit("operation"), col("op")).as("value"),
         array(
           struct(lit("operation").as("key"), col("op").cast("binary").as("value")),
           struct(lit("table").as("key"),
@@ -205,9 +203,9 @@ object Handlers {
     * image columns in BOTH row images before serialization — PII never
     * reaches the sink topic, while key extraction / routing still see
     * the full map. Native `map_mask_keys` expression, not a
-    * `transform_values` lambda, for the same whole-stage-codegen reason
-    * as the serializer's `map_drop_key` ([[MapDropKey]] scaladoc): one
-    * fallback expression would unfuse the entire serializer stage.
+    * `transform_values` lambda ([[graft.functions.MapMaskKeys]]
+    * scaladoc): one fallback expression would unfuse the entire
+    * serializer stage.
     */
   def maskImage(events: DataFrame, fields: Seq[String],
       mask: String = "***"): DataFrame = {

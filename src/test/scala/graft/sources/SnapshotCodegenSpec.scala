@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{CreateMap, StructsToJson}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 
 import graft.SparkSpec
@@ -13,7 +14,8 @@ import graft.streaming.{CdcPipeline, PipelineProbe}
   * queries of one pipeline shape, built apart in time, must generate
   * the same whole-stage source, so the second reuses the first one's
   * compiled class. The snapshot's per-query `eventTime` stamp must not
-  * reach the source text as a literal.
+  * reach the source text as a literal. The flat lane's plan stays one
+  * fused stage built from the native image and value writer.
   */
 class SnapshotCodegenSpec extends SparkSpec {
 
@@ -66,6 +68,21 @@ class SnapshotCodegenSpec extends SparkSpec {
   private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("the probed flat snapshot plan is one fused stage with no map(), to_json or map copy") {
+    val df = CdcPipeline.defaultTransform(events, cfg(ConnectorConfig.SerializerDefault),
+      Some(probe))
+    noop(df)
+    val plan = df.queryExecution.executedPlan
+    assert(plan.collect { case w: WholeStageCodegenExec => w }.size == 1, plan)
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(!exprs.exists(_.isInstanceOf[CreateMap]), plan)
+    assert(!exprs.exists(_.isInstanceOf[StructsToJson]), plan)
+    val text = plan.toString.toLowerCase
+    Seq("map_set_key", "to_json", "structstojson", "createmap").foreach(s =>
+      assert(!text.contains(s), s"$s in\n$plan"))
+    assert(text.contains("row_image") && text.contains("flat_json"), plan)
+  }
 
   shapes.foreach { case (name, build) =>
     test(s"$name: a second snapshot query compiles nothing") {

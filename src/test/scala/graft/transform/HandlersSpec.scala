@@ -41,8 +41,8 @@ class HandlersSpec extends SparkSpec {
 
   test("declarative handler: source column named 'operation' is overwritten, not duplicated") {
     import spark.implicits._
-    // reference map-insert overwrites (example/simple/main.go:113-114);
-    // this exercises the gated map_filter branch (the codegen-fallback path)
+    // reference map-insert overwrites (example/simple/main.go:113-114):
+    // flat_json drops the image's own "operation" entry
     val events = Seq(ev(Op.Update,
       oldD = Map("id" -> "3"),
       newD = Map("id" -> "3", "operation" -> "stale", "name" -> "n"))).toDF()

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanShim
 
 import graft.sources.Tables
 import Exact._
@@ -405,6 +406,102 @@ object Analytic {
       |FROM events e JOIN customer c ON e.user_id = c.c_custkey
       |ORDER BY e.event_id""".stripMargin
 
+  /** The op rule of the synthetic change logs (q46's CDC semantics): an
+    * id divisible by 10 is a DELETE, else one divisible by 3 an UPDATE,
+    * else an INSERT.
+    */
+  private def cdcOp(id: Column): Column =
+    when(id % 10 === 0, "DELETE").when(id % 3 === 0, "UPDATE").otherwise("INSERT")
+
+  /** Source table `name` (its rows `table`) as a change log in the
+    * ChangeEvent shape, the input every replica-lane replay feeds: ops
+    * by [[cdcOp]] on `id`, `eventTime` from `time`, and the row image —
+    * `key`, `id` and `payload`, as strings — in `oldData` for a DELETE
+    * and in `newData` otherwise. `batch_src` (= `id`) is the handle
+    * [[replay]] batches on.
+    */
+  private def changeLog(table: DataFrame, name: String, id: String,
+      time: String, key: String, payload: Seq[String]): DataFrame = {
+    val image = map((key +: id +: payload).flatMap(c => Seq(lit(c), col(c).cast("string"))): _*)
+    val empty = map().cast("map<string,string>")
+    table
+      .withColumn("op", cdcOp(col(id)))
+      .select(
+        col(id).as("batch_src"),
+        col(time).cast("timestamp").as("eventTime"),
+        lit("public").as("tableNamespace"), lit(name).as("tableName"),
+        when(col("op") === "DELETE", image).otherwise(empty).as("oldData"),
+        when(col("op") =!= "DELETE", image).otherwise(empty).as("newData"),
+        col("op"))
+  }
+
+  /** The events change log of q64 and its replays, keyed by user. */
+  private def eventLog(events: DataFrame, payload: String*): DataFrame =
+    changeLog(events, "events", id = "event_id", time = "ts", key = "user_id", payload)
+
+  /** Replay a [[changeLog]] in three deliberately interleaved
+    * micro-batches (`batch_src` mod 3, so later-timestamped changes
+    * often land in EARLIER batches), calling `apply(batch, i)` for
+    * batches 0, 1, 2 in order. The log is checkpointed once: one scan
+    * feeds all three batches.
+    */
+  private def replay(log: DataFrame)(apply: (DataFrame, Int) => Unit): Unit = {
+    val s = log.sparkSession
+    import s.implicits._
+    val events = log.localCheckpoint(true)
+    (0 until 3).foreach { i =>
+      apply(events.filter(pmod($"batch_src", lit(3)) === i).drop("batch_src"), i)
+    }
+  }
+
+  /** The replica lanes' result rows (q64, q270): each live key's
+    * current event.
+    */
+  private def replicaEvents(s: SparkSession, tablePath: String): DataFrame = {
+    import s.implicits._
+    graft.streaming.Materialize.replica(s, tablePath)
+      .select(
+        $"k".cast("long").as("user_id"),
+        $"seq".as("event_id"),
+        element_at($"data", "event_type").as("event_type"),
+        element_at($"data", "value").cast("double").as("value"),
+        $"event_time")
+      .orderBy($"user_id")
+  }
+
+  /** The oracles' twin of [[changeLog]]'s op rule (no WITH, no trailing
+    * comma): `src` with its [[cdcOp]] column.
+    */
+  private def logCte(id: String, src: String): String =
+    s"""log AS (
+      |  SELECT *, CASE WHEN $id % 10 = 0 THEN 'DELETE'
+      |                 WHEN $id % 3 = 0 THEN 'UPDATE'
+      |                 ELSE 'INSERT' END AS op
+      |  FROM $src)""".stripMargin
+
+  /** Each user's latest change in `src`, ranked `rn` (no trailing comma). */
+  private def latestEventCte(src: String): String =
+    s"""latest AS (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+      |  FROM $src)""".stripMargin
+
+  /** The events change log and its latest-by-user ranking, the CTEs of
+    * every events-replay oracle. Defined above its users: an object's
+    * vals initialize in order.
+    */
+  private val eventLatestCtes: String =
+    s"${logCte("event_id", "events")},\n${latestEventCte("log")}"
+
+  /** The orders change log (q284/q288) and its latest-by-customer
+    * ranking.
+    */
+  private val orderLatestCtes: String =
+    s"""${logCte("o_orderkey", "orders")},
+      |latest AS (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
+      |    ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+      |  FROM log)""".stripMargin
+
   /** CDC log-compaction apply — materialize current state from a change
     * log: a deterministic op column (INSERT/UPDATE/DELETE) is derived
     * from the event stream, the log is compacted latest-wins per key
@@ -415,11 +512,7 @@ object Analytic {
     */
   def q46CdcApply(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val log = Tables.load(s, dir, "events")
-      .withColumn("op",
-        when($"event_id" % 10 === 0, "DELETE")
-          .when($"event_id" % 3 === 0, "UPDATE")
-          .otherwise("INSERT"))
+    val log = Tables.load(s, dir, "events").withColumn("op", cdcOp($"event_id"))
     Windows.latestByKey(log, keys = Seq("user_id"), orderCols = Seq("ts", "event_id"))
       .filter($"op" =!= "DELETE")
       .select($"user_id", $"op", $"event_id", $"event_type", $"value")
@@ -429,54 +522,21 @@ object Analytic {
   /** The STREAMING-APPLY twin of q46: the same change log is replayed
     * through `streaming/Materialize.applyBatch` — the copy-on-write
     * replica lane (key-hash buckets, partition-pruned merges, partial
-    * rewrites) — in three deliberately interleaved micro-batches
-    * (event_id mod 3, so later-timestamped changes often land in
-    * EARLIER batches), and the materialized replica itself is the query
-    * result. Because the merge orders by (event_time, seq=LSN), the
-    * final table state is independent of how the log was batched, and
-    * the DuckDB latest-by-key oracle grades the whole lane end-to-end:
+    * rewrites) — in three interleaved micro-batches ([[replay]]), and
+    * the materialized replica itself is the query result. Because the
+    * merge orders by (event_time, seq=LSN), the final table state is
+    * independent of how the log was batched, and the DuckDB
+    * latest-by-key oracle grades the whole lane end-to-end:
     * key extraction, per-batch compaction, cross-batch merge,
     * delete-drop, emptied-bucket cleanup.
     */
   def q64CdcReplica(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val log = Tables.load(s, dir, "events")
-      .withColumn("op",
-        when($"event_id" % 10 === 0, "DELETE")
-          .when($"event_id" % 3 === 0, "UPDATE")
-          .otherwise("INSERT"))
-    val payload = map(
-      lit("user_id"), $"user_id".cast("string"),
-      lit("event_id"), $"event_id".cast("string"),
-      lit("event_type"), $"event_type",
-      lit("value"), $"value".cast("string"))
-    val events = log.select(
-      $"event_id".as("batch_src"), // batching handle only; dropped by applyBatch
-      $"ts".as("eventTime"),
-      lit("public").as("tableNamespace"), lit("events").as("tableName"),
-      when($"op" === "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("oldData"),
-      when($"op" =!= "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("newData"),
-      $"op")
-      // the replay harness re-filters this log per batch; materialize the
-      // scan once instead of three times
-      .localCheckpoint(true)
-    val tablePath =
-      java.nio.file.Files.createTempDirectory("graft_q64_replica").toString + "/t"
-    (0 until 3).foreach { i =>
-      graft.streaming.Materialize.applyBatch(
-        events.filter(pmod($"batch_src", lit(3)) === i).drop("batch_src"),
-        keyField = "user_id", tablePath, nBuckets = 8, seqCol = Some("event_id"))
+    val tablePath = PlanShim.tempDir("graft_q64_replica") + "/t"
+    replay(eventLog(Tables.load(s, dir, "events"), "event_type", "value")) { (batch, _) =>
+      graft.streaming.Materialize.applyBatch(batch, keyField = "user_id", tablePath,
+        nBuckets = 8, seqCol = Some("event_id"))
     }
-    graft.streaming.Materialize.replica(s, tablePath)
-      .select(
-        $"k".cast("long").as("user_id"),
-        $"seq".as("event_id"),
-        element_at($"data", "event_type").as("event_type"),
-        element_at($"data", "value").cast("double").as("value"),
-        $"event_time")
-      .orderBy($"user_id")
+    replicaEvents(s, tablePath)
   }
 
   /** Incrementally-maintained materialized aggregate over the CDC
@@ -491,37 +551,14 @@ object Analytic {
     */
   def q65IncrMv(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val log = Tables.load(s, dir, "events")
-      .withColumn("op",
-        when($"event_id" % 10 === 0, "DELETE")
-          .when($"event_id" % 3 === 0, "UPDATE")
-          .otherwise("INSERT"))
-    val payload = map(
-      lit("user_id"), $"user_id".cast("string"),
-      lit("event_id"), $"event_id".cast("string"),
-      lit("event_type"), $"event_type",
-      lit("value"), $"value".cast("string"))
-    val events = log.select(
-      $"event_id".as("batch_src"),
-      $"ts".as("eventTime"),
-      lit("public").as("tableNamespace"), lit("events").as("tableName"),
-      when($"op" === "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("oldData"),
-      when($"op" =!= "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("newData"),
-      $"op")
-      .localCheckpoint(true) // one scan feeds all three replay batches
-    val base = java.nio.file.Files.createTempDirectory("graft_q65_mv").toString
-    val tablePath = s"$base/t"
-    val aggPath = s"$base/agg"
-    (0 until 3).foreach { i =>
+    val base = PlanShim.tempDir("graft_q65_mv")
+    replay(eventLog(Tables.load(s, dir, "events"), "event_type", "value")) { (batch, _) =>
       val changes = graft.streaming.Materialize.applyBatchCdf(
-        events.filter(pmod($"batch_src", lit(3)) === i).drop("batch_src"),
-        keyField = "user_id", tablePath, nBuckets = 8, seqCol = Some("event_id"))
+        batch, keyField = "user_id", s"$base/t", nBuckets = 8, seqCol = Some("event_id"))
       graft.streaming.Materialize.applyAggregateDelta(
-        changes, groupField = "event_type", measureField = "event_id", aggPath)
+        changes, groupField = "event_type", measureField = "event_id", s"$base/agg")
     }
-    s.read.parquet(aggPath)
+    s.read.parquet(s"$base/agg")
       .select($"grp".as("event_type"), $"n", $"m".as("sum_event_id"))
       .orderBy($"event_type")
   }
@@ -568,37 +605,14 @@ object Analytic {
     FamilyCaches.memoDir(s, s"q271Replay:$dir", "graft_q271_mv")(
       replayMinMaxIndexInto(s, dir, _))
 
-  private def replayMinMaxIndexInto(s: SparkSession, dir: String, base: String): Unit = {
-    import s.implicits._
-    val log = Tables.load(s, dir, "events")
-      .withColumn("op",
-        when($"event_id" % 10 === 0, "DELETE")
-          .when($"event_id" % 3 === 0, "UPDATE")
-          .otherwise("INSERT"))
-    val payload = map(
-      lit("user_id"), $"user_id".cast("string"),
-      lit("event_id"), $"event_id".cast("string"),
-      lit("event_type"), $"event_type",
-      lit("value"), $"value".cast("string"))
-    val events = log.select(
-      $"event_id".as("batch_src"),
-      $"ts".as("eventTime"),
-      lit("public").as("tableNamespace"), lit("events").as("tableName"),
-      when($"op" === "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("oldData"),
-      when($"op" =!= "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("newData"),
-      $"op")
-      .localCheckpoint(true) // one scan feeds all three replay batches
-    (0 until 3).foreach { i =>
+  private def replayMinMaxIndexInto(s: SparkSession, dir: String, base: String): Unit =
+    replay(eventLog(Tables.load(s, dir, "events"), "event_type", "value")) { (batch, _) =>
       val changes = graft.streaming.Materialize.applyBatchCdf(
-        events.filter(pmod($"batch_src", lit(3)) === i).drop("batch_src"),
-        keyField = "user_id", s"$base/t", nBuckets = 8, seqCol = Some("event_id"))
+        batch, keyField = "user_id", s"$base/t", nBuckets = 8, seqCol = Some("event_id"))
       graft.streaming.Materialize.applyMinMaxDelta(
         changes, groupField = "event_type", measureField = "event_id",
         s"$base/idx", s"$base/view", nBuckets = 8)
     }
-  }
 
   /** q273 — exact per-group MEDIAN served FROM the maintained value
     * index (the order statistic a min/max view cannot give and a
@@ -653,14 +667,7 @@ object Analytic {
   }
 
   val q275CdcTopkMvSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN event_id % 10 = 0 THEN 'DELETE'
-      |                 WHEN event_id % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM events),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM log),
+    s"""WITH $eventLatestCtes,
       |vals AS (
       |  SELECT event_type, event_id AS v FROM latest
       |  WHERE rn = 1 AND op <> 'DELETE'),
@@ -691,14 +698,7 @@ object Analytic {
   }
 
   val q276CdcDistinctMvSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN event_id % 10 = 0 THEN 'DELETE'
-      |                 WHEN event_id % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM events),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM log),
+    s"""WITH $eventLatestCtes,
       |vals AS (
       |  SELECT event_type, event_id AS v FROM latest
       |  WHERE rn = 1 AND op <> 'DELETE')
@@ -709,14 +709,7 @@ object Analytic {
       |ORDER BY event_type""".stripMargin
 
   val q273CdcMedianMvSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN event_id % 10 = 0 THEN 'DELETE'
-      |                 WHEN event_id % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM events),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM log),
+    s"""WITH $eventLatestCtes,
       |vals AS (
       |  SELECT event_type, event_id AS v FROM latest
       |  WHERE rn = 1 AND op <> 'DELETE'),
@@ -731,14 +724,7 @@ object Analytic {
       |ORDER BY event_type""".stripMargin
 
   val q271CdcMinMaxMvSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN event_id % 10 = 0 THEN 'DELETE'
-      |                 WHEN event_id % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM events),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM log)
+    s"""WITH $eventLatestCtes
       |SELECT event_type,
       |  CAST(MIN(event_id) AS BIGINT) AS min_event_id,
       |  CAST(MAX(event_id) AS BIGINT) AS max_event_id,
@@ -784,32 +770,12 @@ object Analytic {
     FamilyCaches.memoDir(s, s"q284Replay:$dir", "graft_q284_mv")(
       replayDecimalMvInto(s, dir, _))
 
-  private def replayDecimalMvInto(s: SparkSession, dir: String, base: String): Unit = {
-    import s.implicits._
-    val log = Tables.load(s, dir, "orders")
-      .withColumn("op",
-        when($"o_orderkey" % 10 === 0, "DELETE")
-          .when($"o_orderkey" % 3 === 0, "UPDATE")
-          .otherwise("INSERT"))
-    val payload = map(
-      lit("o_custkey"), $"o_custkey".cast("string"),
-      lit("o_orderkey"), $"o_orderkey".cast("string"),
-      lit("o_orderpriority"), $"o_orderpriority",
-      lit("o_totalprice"), $"o_totalprice".cast("string"))
-    val events = log.select(
-      $"o_orderkey".as("batch_src"),
-      $"o_orderdate".cast("timestamp").as("eventTime"),
-      lit("public").as("tableNamespace"), lit("orders").as("tableName"),
-      when($"op" === "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("oldData"),
-      when($"op" =!= "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("newData"),
-      $"op")
-      .localCheckpoint(true) // one scan feeds all three replay batches
-    (0 until 3).foreach { i =>
+  private def replayDecimalMvInto(s: SparkSession, dir: String, base: String): Unit =
+    replay(changeLog(Tables.load(s, dir, "orders"), "orders", id = "o_orderkey",
+        time = "o_orderdate", key = "o_custkey",
+        payload = Seq("o_orderpriority", "o_totalprice"))) { (batch, _) =>
       val changes = graft.streaming.Materialize.applyBatchCdf(
-        events.filter(pmod($"batch_src", lit(3)) === i).drop("batch_src"),
-        keyField = "o_custkey", s"$base/t", nBuckets = 8,
+        batch, keyField = "o_custkey", s"$base/t", nBuckets = 8,
         seqCol = Some("o_orderkey"))
       graft.streaming.Materialize.applyMinMaxDelta(
         changes, groupField = "o_orderpriority", measureField = "o_totalprice",
@@ -820,7 +786,6 @@ object Analytic {
         changes, groupField = "o_orderpriority", measureField = "o_totalprice",
         s"$base/moments", measureScale = 2)
     }
-  }
 
   /** q288 — exact incremental MEAN/VARIANCE view over the decimal
     * measure (the subtractable second-moment completion of the MV
@@ -850,15 +815,7 @@ object Analytic {
   }
 
   val q288CdcMomentsMvSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN o_orderkey % 10 = 0 THEN 'DELETE'
-      |                 WHEN o_orderkey % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM orders),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-      |    ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-      |  FROM log),
+    s"""WITH $orderLatestCtes,
       |vals AS (
       |  SELECT o_orderpriority,
       |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -875,15 +832,7 @@ object Analytic {
       |FROM m ORDER BY o_orderpriority""".stripMargin
 
   val q284CdcDecimalMvSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN o_orderkey % 10 = 0 THEN 'DELETE'
-      |                 WHEN o_orderkey % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM orders),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-      |    ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-      |  FROM log),
+    s"""WITH $orderLatestCtes,
       |vals AS (
       |  SELECT o_orderpriority,
       |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -896,14 +845,7 @@ object Analytic {
       |ORDER BY o_orderpriority""".stripMargin
 
   val q65IncrMvSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN event_id % 10 = 0 THEN 'DELETE'
-      |                 WHEN event_id % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM events),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM log)
+    s"""WITH $eventLatestCtes
       |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
       |  CAST(SUM(event_id) AS BIGINT) AS sum_event_id
       |FROM latest WHERE rn = 1 AND op <> 'DELETE'
@@ -948,25 +890,6 @@ object Analytic {
       .orderBy($"ts".desc, $"event_id".desc).limit(1)
       .select($"ts", $"event_id").first()
     val (t0, s0) = (cut.getTimestamp(0), cut.getLong(1))
-    val log = ev0
-      .withColumn("op",
-        when($"event_id" % 10 === 0, "DELETE")
-          .when($"event_id" % 3 === 0, "UPDATE")
-          .otherwise("INSERT"))
-    val payload = map(
-      lit("user_id"), $"user_id".cast("string"),
-      lit("event_id"), $"event_id".cast("string"),
-      lit("event_type"), $"event_type",
-      lit("value"), $"value".cast("string"))
-    val rowEvents = log.select(
-      $"event_id".as("batch_src"),
-      $"ts".as("eventTime"),
-      lit("public").as("tableNamespace"), lit("events").as("tableName"),
-      when($"op" === "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("oldData"),
-      when($"op" =!= "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("newData"),
-      $"op")
     // the TRUNCATE event: commit position (t0, s0) carried through the
     // same seqCol map field the row changes use for their LSN
     val truncEvent = s.range(1).select(
@@ -977,33 +900,16 @@ object Analytic {
       map(lit("event_id"), lit(s0.toString),
         lit("cascade"), lit("false")).as("newData"),
       lit(graft.model.Op.Truncate).as("op"))
-    val events = rowEvents.unionByName(truncEvent)
-      // the replay harness re-filters this log per batch; materialize the
-      // scan once instead of three times
-      .localCheckpoint(true)
-    val tablePath =
-      java.nio.file.Files.createTempDirectory("graft_q270_replica").toString + "/t"
-    (0 until 3).foreach { i =>
-      graft.streaming.Materialize.applyBatch(
-        events.filter(pmod($"batch_src", lit(3)) === i).drop("batch_src"),
-        keyField = "user_id", tablePath, nBuckets = 8, seqCol = Some("event_id"))
+    val tablePath = PlanShim.tempDir("graft_q270_replica") + "/t"
+    replay(eventLog(ev0, "event_type", "value").unionByName(truncEvent)) { (batch, _) =>
+      graft.streaming.Materialize.applyBatch(batch, keyField = "user_id", tablePath,
+        nBuckets = 8, seqCol = Some("event_id"))
     }
-    graft.streaming.Materialize.replica(s, tablePath)
-      .select(
-        $"k".cast("long").as("user_id"),
-        $"seq".as("event_id"),
-        element_at($"data", "event_type").as("event_type"),
-        element_at($"data", "value").cast("double").as("value"),
-        $"event_time")
-      .orderBy($"user_id")
+    replicaEvents(s, tablePath)
   }
 
   val q270CdcTruncateSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN event_id % 10 = 0 THEN 'DELETE'
-      |                 WHEN event_id % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM events),
+    s"""WITH ${logCte("event_id", "events")},
       |cut AS (
       |  SELECT ts AS t0, event_id AS s0 FROM events
       |  WHERE event_id <= (SELECT max(event_id) * 99 // 100 FROM events)
@@ -1011,35 +917,19 @@ object Analytic {
       |surv AS (
       |  SELECT l.* FROM log l, cut c
       |  WHERE l.ts > c.t0 OR (l.ts = c.t0 AND l.event_id >= c.s0)),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM surv)
+      |${latestEventCte("surv")}
       |SELECT user_id, event_id, event_type, value, ts AS event_time
       |FROM latest WHERE rn = 1 AND op <> 'DELETE'
       |ORDER BY user_id""".stripMargin
 
   val q64CdcReplicaSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN event_id % 10 = 0 THEN 'DELETE'
-      |                 WHEN event_id % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM events),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM log)
+    s"""WITH $eventLatestCtes
       |SELECT user_id, event_id, event_type, value, ts AS event_time
       |FROM latest WHERE rn = 1 AND op <> 'DELETE'
       |ORDER BY user_id""".stripMargin
 
   val q46CdcApplySql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN event_id % 10 = 0 THEN 'DELETE'
-      |                 WHEN event_id % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM events),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM log)
+    s"""WITH $eventLatestCtes
       |SELECT user_id, op, event_id, event_type, value
       |FROM latest WHERE rn = 1 AND op <> 'DELETE'
       |ORDER BY user_id""".stripMargin
@@ -1058,31 +948,11 @@ object Analytic {
     */
   def q92TimeTravel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val log = Tables.load(s, dir, "events")
-      .withColumn("op",
-        when($"event_id" % 10 === 0, "DELETE")
-          .when($"event_id" % 3 === 0, "UPDATE")
-          .otherwise("INSERT"))
-    val payload = map(
-      lit("user_id"), $"user_id".cast("string"),
-      lit("event_id"), $"event_id".cast("string"),
-      lit("event_type"), $"event_type")
-    val events = log.select(
-      $"event_id".as("batch_src"),
-      $"ts".as("eventTime"),
-      lit("public").as("tableNamespace"), lit("events").as("tableName"),
-      when($"op" === "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("oldData"),
-      when($"op" =!= "DELETE", payload)
-        .otherwise(map().cast("map<string,string>")).as("newData"),
-      $"op")
-      .localCheckpoint(true)
-    val base = java.nio.file.Files.createTempDirectory("graft_q92_tt").toString
-    val tbl = s"$base/t"; val chg = s"$base/changes"
-    (0 until 3).foreach { i =>
+    val base = PlanShim.tempDir("graft_q92_tt")
+    val chg = s"$base/changes"
+    replay(eventLog(Tables.load(s, dir, "events"), "event_type")) { (batch, i) =>
       graft.streaming.Materialize.applyBatchCdf(
-        events.filter(pmod($"batch_src", lit(3)) === i).drop("batch_src"),
-        keyField = "user_id", tbl, nBuckets = 8, seqCol = Some("event_id"),
+        batch, keyField = "user_id", s"$base/t", nBuckets = 8, seqCol = Some("event_id"),
         beforeTableWrite =
           ch => ch.write.mode("overwrite").parquet(s"$chg/batch=$i"))
     }
@@ -1094,14 +964,8 @@ object Analytic {
   }
 
   val q92TimeTravelSql: String =
-    """WITH log AS (
-      |  SELECT *, CASE WHEN event_id % 10 = 0 THEN 'DELETE'
-      |                 WHEN event_id % 3 = 0 THEN 'UPDATE'
-      |                 ELSE 'INSERT' END AS op
-      |  FROM events WHERE event_id % 3 <> 2),
-      |latest AS (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM log)
+    s"""WITH ${logCte("event_id", "events WHERE event_id % 3 <> 2")},
+      |${latestEventCte("log")}
       |SELECT user_id, event_id, event_type
       |FROM latest WHERE rn = 1 AND op <> 'DELETE'
       |ORDER BY user_id""".stripMargin
@@ -1121,10 +985,7 @@ object Analytic {
     import s.implicits._
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     Tables.load(s, dir, "events")
-      .withColumn("op",
-        when($"event_id" % 10 === 0, "DELETE")
-          .when($"event_id" % 3 === 0, "UPDATE")
-          .otherwise("INSERT"))
+      .withColumn("op", cdcOp($"event_id"))
       .select($"user_id", $"event_id", $"op", $"event_type",
         $"ts".as("valid_from"),
         lead($"ts", 1).over(w).as("valid_to"),
@@ -1160,11 +1021,7 @@ object Analytic {
     */
   def q83Debezium(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val log = Tables.load(s, dir, "events")
-      .withColumn("op",
-        when($"event_id" % 10 === 0, "DELETE")
-          .when($"event_id" % 3 === 0, "UPDATE")
-          .otherwise("INSERT"))
+    val log = Tables.load(s, dir, "events").withColumn("op", cdcOp($"event_id"))
     def img(eventId: Column) = map(
       lit("user_id"), $"user_id".cast("string"),
       lit("event_id"), eventId.cast("string"),

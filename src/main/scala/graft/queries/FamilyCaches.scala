@@ -46,11 +46,12 @@ object FamilyCaches {
     memoize(s, key, build)(_ => None)
 
   /** An on-disk artifact: on a miss `fill` writes a fresh temp
-    * directory, which [[clear]] deletes. Returns the directory.
+    * directory ([[PlanShim.tempDir]]), which [[clear]] deletes, and so
+    * does JVM exit if [[clear]] never runs. Returns the directory.
     */
   def memoDir(s: SparkSession, key: String, prefix: String)(fill: String => Unit): String =
     memoize(s, key, {
-      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+      val dir = PlanShim.tempDir(prefix)
       try { fill(dir); dir }
       catch { case e: Throwable => delete(dir); throw e }
     })(Some(_))

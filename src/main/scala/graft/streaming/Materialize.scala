@@ -60,7 +60,7 @@ import graft.model.Op
   * replica state — same argument as the reference's ACK-after-flush
   * (`/root/reference/connector.go` checkpoint discipline), shifted from
   * Kafka offsets to table state. The incrementally maintained views do
-  * NOT inherit it under a crash: see [[applyStreamWithView]].
+  * NOT inherit it under a crash: see [[applyStream]]'s `onChanges`.
   */
 object Materialize {
 
@@ -194,6 +194,26 @@ object Materialize {
           .toString.take(8))
   }
 
+  /** The one sink skeleton every replica stream shares (the Structured
+    * Streaming sink contract): take the single-writer lease on each of
+    * `tablePaths` at start, renew them at the top of every micro-batch,
+    * and run `apply(batch, batchId)` inside `foreachBatch`, so the
+    * batch commits (ACKs) only after the apply returned.
+    */
+  private def leasedStream(events: DataFrame, tablePaths: Seq[String],
+      checkpoint: String, instanceId: String)(
+      apply: (DataFrame, Long) => Unit): StreamingQuery = {
+    val leases = tablePaths.map(p => new WriterLease(events.sparkSession, p,
+      WriterLease.identity(instanceId, checkpoint)).acquire())
+    events.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
+        leases.foreach(_.renew())
+        apply(batch.toDF(), batchId)
+      }
+      .start()
+  }
+
   /** Start continuously applying `events` (ChangeEvent schema) into the
     * replica at `tablePath`, keyed by `keyField` (a data-map key, e.g.
     * the table's PK column). `seqCol` optionally names a data-map field
@@ -201,21 +221,29 @@ object Materialize {
     * CDC apply order is log order, with the event timestamp only a
     * coarse prefix of it — when set, ties in event time resolve by
     * sequence, exactly the reference's per-key delivery-order guarantee.
+    *
+    * `onChanges` receives each batch's change feed ([[applyBatchCdf]])
+    * after the replica merge — the hook an incrementally-maintained
+    * view hangs on: pass one that calls [[applyAggregateDelta]],
+    * [[applyMomentsDelta]] or [[applyMinMaxDelta]] to keep that view
+    * current without ever rescanning the replica. The default ignores
+    * the feed, which is lazy, so no job evaluates it.
+    *
+    * A view fed this way is exactly-once only while every batch
+    * completes both writes. The view write runs AFTER the replica
+    * overwrite; if the process dies between the two, the redelivered
+    * batch finds the replica already merged, its change feed nets to
+    * before == after and cancels, and the view misses that batch for
+    * good.
     */
   def applyStream(events: DataFrame, keyField: String, tablePath: String,
       checkpoint: String, nBuckets: Int = 16,
       seqCol: Option[String] = None,
-      instanceId: String = null): StreamingQuery = {
-    val lease = new WriterLease(events.sparkSession, tablePath,
-      WriterLease.identity(instanceId, checkpoint)).acquire()
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        lease.renew()
-        applyBatch(batch.toDF(), keyField, tablePath, nBuckets, seqCol)
-      }
-      .start()
-  }
+      instanceId: String = null,
+      onChanges: DataFrame => Unit = _ => ()): StreamingQuery =
+    leasedStream(events, Seq(tablePath), checkpoint, instanceId) { (batch, _) =>
+      onChanges(applyBatchCdf(batch, keyField, tablePath, nBuckets, seqCol))
+    }
 
   /** Apply one batch of change events to the replica (idempotent). */
   def applyBatch(batch: DataFrame, keyField: String, tablePath: String,
@@ -237,23 +265,16 @@ object Materialize {
   def applyStreamPerTable(events: DataFrame, tables: Map[String, String],
       baseDir: String, checkpoint: String, nBuckets: Int = 16,
       seqCol: Option[String] = None,
-      instanceId: String = null): StreamingQuery = {
-    val leases = tables.keys.map(fullName =>
-      new WriterLease(events.sparkSession, s"$baseDir/$fullName",
-        WriterLease.identity(instanceId, checkpoint)).acquire()).toSeq
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        leases.foreach(_.renew())
-        val b = batch.toDF().localCheckpoint(true) // one source read feeds all tables
-        tables.foreach { case (fullName, keyField) =>
-          applyBatch(
-            b.filter(concat_ws(".", col("tableNamespace"), col("tableName")) === fullName),
-            keyField, s"$baseDir/$fullName", nBuckets, seqCol)
-        }
+      instanceId: String = null): StreamingQuery =
+    leasedStream(events, tables.keys.map(fullName => s"$baseDir/$fullName").toSeq,
+        checkpoint, instanceId) { (batch, _) =>
+      val b = batch.localCheckpoint(true) // one source read feeds all tables
+      tables.foreach { case (fullName, keyField) =>
+        applyBatch(
+          b.filter(concat_ws(".", col("tableNamespace"), col("tableName")) === fullName),
+          keyField, s"$baseDir/$fullName", nBuckets, seqCol)
       }
-      .start()
-  }
+    }
 
   /** Replica + PERSISTED change feed in one stream: each batch's net
     * changes land under `changesDir/batch=<id>` — the downstream
@@ -270,54 +291,16 @@ object Materialize {
   def applyStreamWithChangelog(events: DataFrame, keyField: String,
       tablePath: String, changesDir: String, checkpoint: String,
       nBuckets: Int = 16, seqCol: Option[String] = None,
-      instanceId: String = null): StreamingQuery = {
-    val lease = new WriterLease(events.sparkSession, tablePath,
-      WriterLease.identity(instanceId, checkpoint)).acquire()
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        lease.renew()
-        val b = batch.toDF()
-        val part = new Path(changesDir, s"batch=$batchId")
-        val fs = part.getFileSystem(b.sparkSession.sparkContext.hadoopConfiguration)
-        applyBatchCdf(b, keyField, tablePath, nBuckets, seqCol,
-          beforeTableWrite = changes =>
-            if (!fs.exists(new Path(part, "_SUCCESS")))
-              changes.write.mode("overwrite").parquet(part.toString))
-        ()
-      }
-      .start()
-  }
-
-  /** Replica + incrementally-maintained aggregate view in one stream:
-    * each batch's change feed drives [[applyAggregateDelta]] after the
-    * replica merge, keeping `SELECT grp, count(*), sum(m) GROUP BY grp`
-    * continuously current without ever rescanning the replica.
-    *
-    * The view is exactly-once only while every batch completes both
-    * writes. The view write runs AFTER the replica overwrite; if the
-    * process dies between the two, the redelivered batch finds the
-    * replica already merged, its change feed nets to before == after
-    * and cancels, and the view misses that batch for good. The same
-    * holds for [[applyStreamWithMinMaxView]] and
-    * [[applyStreamWithMomentsView]].
-    */
-  def applyStreamWithView(events: DataFrame, keyField: String, tablePath: String,
-      aggPath: String, groupField: String, measureField: String,
-      checkpoint: String, nBuckets: Int = 16,
-      seqCol: Option[String] = None,
-      instanceId: String = null): StreamingQuery = {
-    val lease = new WriterLease(events.sparkSession, tablePath,
-      WriterLease.identity(instanceId, checkpoint)).acquire()
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        lease.renew()
-        val changes = applyBatchCdf(batch.toDF(), keyField, tablePath, nBuckets, seqCol)
-        applyAggregateDelta(changes, groupField, measureField, aggPath)
-      }
-      .start()
-  }
+      instanceId: String = null): StreamingQuery =
+    leasedStream(events, Seq(tablePath), checkpoint, instanceId) { (b, batchId) =>
+      val part = new Path(changesDir, s"batch=$batchId")
+      val fs = part.getFileSystem(b.sparkSession.sparkContext.hadoopConfiguration)
+      applyBatchCdf(b, keyField, tablePath, nBuckets, seqCol,
+        beforeTableWrite = changes =>
+          if (!fs.exists(new Path(part, "_SUCCESS")))
+            changes.write.mode("overwrite").parquet(part.toString))
+      ()
+    }
 
   /** Apply one batch and return its CHANGE DATA FEED: the net row-level
     * effect on the replica, one row per key the batch actually changed —
@@ -329,7 +312,7 @@ object Materialize {
     * therefore counts a batch exactly once only if the batch's FIRST
     * delivery reached the view; a crash after the replica write but
     * before the view write loses the batch for the view (see
-    * [[applyStreamWithView]]). This is the feed
+    * [[applyStream]]'s `onChanges`). This is the feed
     * that makes the replica a SOURCE: incremental aggregate maintenance
     * ([[applyAggregateDelta]]), audit trails, downstream CDC fan-out.
     */
@@ -500,25 +483,17 @@ object Materialize {
     // simply lands again — the feed never records the degraded
     // post-apply view a recomputation would produce
     beforeTableWrite(changes)
-    winners
-      .select(col(KeyCol), $"op", $"data", $"event_time", $"seq", $"bucket")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic") // only touched buckets
-      .partitionBy("bucket")
-      .parquet(tablePath)
-    if (clearPass) {
-      // a bucket the truncate fully emptied produces no output rows, and
-      // dynamic overwrite would keep its stale file — drop it explicitly
-      // (the vacuum discipline), then pin the horizon LAST: a crash
-      // anywhere above redelivers into a recomputation of the same
-      // horizon, so ordering here is for tidiness, not correctness
-      val stillWritten =
-        winners.select($"bucket").distinct().collect().map(_.getInt(0)).toSet
-      (touched.toSet -- stillWritten).foreach { b =>
-        fs.delete(new Path(tablePath, s"bucket=$b"), true)
-      }
-      horizon.foreach(writeHorizon(fs, tablePath, _))
-    }
+    // only touched buckets are rewritten; a bucket the truncate fully
+    // emptied produces no output rows, so a clear pass deletes it
+    // explicitly (the vacuum discipline) — without a truncate every
+    // touched bucket keeps at least its winner, and no probe runs
+    rewriteBuckets(
+      winners.select(col(KeyCol), $"op", $"data", $"event_time", $"seq", $"bucket"),
+      tablePath, if (clearPass) touched.toSet else Set.empty)
+    // the horizon is pinned LAST: a crash anywhere above redelivers into
+    // a recomputation of the same horizon, so ordering here is for
+    // tidiness, not correctness
+    if (clearPass) horizon.foreach(writeHorizon(fs, tablePath, _))
     changes
   }
 
@@ -583,6 +558,40 @@ object Materialize {
     when(raw.isNull, lit(null).cast("long")).otherwise(withFast)
   }
 
+  /** The change feed as signed measure deltas `(grp, v, sign)`: one
+    * −1 row per `before` image and one +1 row per `after` image, `v`
+    * the measure through [[scaledLongMeasure]]. A redelivered change
+    * (before == after) yields a cancelling pair; every view maintainer
+    * below folds these rows.
+    */
+  private def signedDeltas(changes: DataFrame, groupField: String,
+      measureField: String, measureScale: Int): DataFrame = {
+    def side(image: String, sign: Long) =
+      changes.filter(col(image).isNotNull).select(
+        element_at(col(image), groupField).as("grp"),
+        scaledLongMeasure(element_at(col(image), measureField),
+          measureField, measureScale).as("v"),
+        lit(sign).as("sign"))
+    side("before", -1L).unionByName(side("after", 1L))
+  }
+
+  /** Rewrite the bucket partitions of `path` that `rows` holds (dynamic
+    * overwrite), then delete each bucket of `mayEmpty` that `rows` no
+    * longer fills: dynamic overwrite keeps an emptied partition's stale
+    * files. An empty `mayEmpty` skips the probe job.
+    */
+  private def rewriteBuckets(rows: DataFrame, path: String, mayEmpty: Set[Int]): Unit = {
+    rows.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket")
+      .parquet(path)
+    if (mayEmpty.nonEmpty) {
+      val still = rows.select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
+      val fs = new Path(path).getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+      (mayEmpty -- still).foreach(b => fs.delete(new Path(path, s"bucket=$b"), true))
+    }
+  }
+
   /** Incrementally maintain a grouped-aggregate table (count + an exact
     * integer sum per group) from a change feed — the materialized-view
     * half of CDC apply: instead of recomputing `SELECT grp, count(*),
@@ -593,7 +602,7 @@ object Materialize {
     * first delivery reached the view adds nothing. That is not
     * exactly-once under a crash: a batch whose replica write completed
     * but whose view write did not is lost for the view (the window
-    * [[applyStreamWithView]] describes). The view table is
+    * [[applyStream]]'s `onChanges` describes). The view table is
     * output-sized (one row per group); at a group cardinality where the
     * full rewrite matters, shard it with the replica's bucket pattern.
     */
@@ -615,17 +624,8 @@ object Materialize {
       measureField: String, aggPath: String, measureScale: Int): Unit = {
     val s = changes.sparkSession
     import s.implicits._
-    val minus = changes.filter($"before".isNotNull).select(
-      element_at($"before", groupField).as("grp"),
-      lit(-1L).as("dn"),
-      (-scaledLongMeasure(element_at($"before", measureField),
-        measureField, measureScale)).as("dm"))
-    val plus = changes.filter($"after".isNotNull).select(
-      element_at($"after", groupField).as("grp"),
-      lit(1L).as("dn"),
-      scaledLongMeasure(element_at($"after", measureField),
-        measureField, measureScale).as("dm"))
-    val deltas = minus.unionByName(plus)
+    val deltas = signedDeltas(changes, groupField, measureField, measureScale)
+      .select($"grp", $"sign".as("dn"), ($"v" * $"sign").as("dm"))
     val fs = new Path(aggPath).getFileSystem(s.sparkContext.hadoopConfiguration)
     val current =
       if (fs.exists(new Path(aggPath)))
@@ -656,17 +656,9 @@ object Materialize {
     val s = changes.sparkSession
     import s.implicits._
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    def moments(img: Column, sign: Int) = {
-      val v = scaledLongMeasure(element_at(img, measureField), measureField, measureScale)
-      Seq(lit(sign.toLong).as("dn"),
-        (v * sign).as("ds1"),
-        (v.cast(dec38) * v * sign).as("ds2"))
-    }
-    val minus = changes.filter($"before".isNotNull).select(
-      element_at($"before", groupField).as("grp") +: moments($"before", -1): _*)
-    val plus = changes.filter($"after".isNotNull).select(
-      element_at($"after", groupField).as("grp") +: moments($"after", 1): _*)
-    val deltas = minus.unionByName(plus)
+    val deltas = signedDeltas(changes, groupField, measureField, measureScale)
+      .select($"grp", $"sign".as("dn"), ($"v" * $"sign").as("ds1"),
+        ($"v".cast(dec38) * $"v" * $"sign").as("ds2"))
     val fs = new Path(aggPath).getFileSystem(s.sparkContext.hadoopConfiguration)
     val current =
       if (fs.exists(new Path(aggPath)))
@@ -731,7 +723,7 @@ object Materialize {
     * smaller. Redelivery of a batch that already reached the index is
     * a no-op through the feed ([[applyBatchCdf]]), with the same crash
     * window between the replica and view writes as
-    * [[applyStreamWithView]]; TRUNCATE retractions flow through the
+    * [[applyStream]]'s `onChanges`; TRUNCATE retractions flow through the
     * same deltas, emptying the view.
     */
   def applyMinMaxDelta(changes: DataFrame, groupField: String,
@@ -739,18 +731,8 @@ object Materialize {
       nBuckets: Int = 16, measureScale: Int = 0): Unit = {
     val s = changes.sparkSession
     import s.implicits._
-    val minus = changes.filter($"before".isNotNull).select(
-      element_at($"before", groupField).as("grp"),
-      scaledLongMeasure(element_at($"before", measureField),
-        measureField, measureScale).as("v"),
-      lit(-1L).as("cnt"))
-    val plus = changes.filter($"after".isNotNull).select(
-      element_at($"after", groupField).as("grp"),
-      scaledLongMeasure(element_at($"after", measureField),
-        measureField, measureScale).as("v"),
-      lit(1L).as("cnt"))
-    val deltas = minus.unionByName(plus)
-      .groupBy($"grp", $"v").agg(sum($"cnt").as("cnt"))
+    val deltas = signedDeltas(changes, groupField, measureField, measureScale)
+      .groupBy($"grp", $"v").agg(sum($"sign").as("cnt"))
       .filter($"cnt" =!= 0)
       .withColumn("bucket", pmod(xxhash64($"grp"), lit(nBuckets)).cast("int"))
       // feeds the touched-bucket probe AND the merge — one evaluation
@@ -777,15 +759,7 @@ object Materialize {
       .filter($"cnt" =!= 0)
       // feeds the index rewrite AND the view recompute
       .localCheckpoint(true)
-    merged.select($"grp", $"v", $"cnt", $"bucket")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(indexPath)
-    val stillIdx = merged.select($"bucket").distinct().collect().map(_.getInt(0)).toSet
-    (touched.toSet -- stillIdx).foreach { b =>
-      fs.delete(new Path(indexPath, s"bucket=$b"), true)
-    }
+    rewriteBuckets(merged.select($"grp", $"v", $"cnt", $"bucket"), indexPath, touched.toSet)
     // view rows for every group living in the touched buckets (a
     // superset of the touched groups — same-bucket neighbors recompute
     // to their unchanged values; cost stays bucket-bounded)
@@ -793,15 +767,7 @@ object Materialize {
       .agg(min($"v").as("mn"), max($"v").as("mx"), sum($"cnt").as("n"))
       .select($"grp", $"mn", $"mx", $"n", $"bucket")
       .localCheckpoint(true)
-    recomputed.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(viewPath)
-    val stillView = recomputed.select($"bucket").distinct().collect().map(_.getInt(0)).toSet
-    val vfs = new Path(viewPath).getFileSystem(s.sparkContext.hadoopConfiguration)
-    (touched.toSet -- stillView).foreach { b =>
-      vfs.delete(new Path(viewPath, s"bucket=$b"), true)
-    }
+    rewriteBuckets(recomputed, viewPath, touched.toSet)
   }
 
   /** The maintained min/max view as a DataFrame (grp, mn, mx, n);
@@ -819,50 +785,6 @@ object Materialize {
       lit(null).cast("long").as("mn"),
       lit(null).cast("long").as("mx"),
       lit(null).cast("long").as("n"))
-  }
-
-  /** Replica + incrementally-maintained min/max view in one stream —
-    * [[applyStreamWithView]]'s non-subtractable sibling, with the same
-    * crash window between the replica and view writes.
-    */
-  def applyStreamWithMinMaxView(events: DataFrame, keyField: String,
-      tablePath: String, indexPath: String, viewPath: String,
-      groupField: String, measureField: String, checkpoint: String,
-      nBuckets: Int = 16, seqCol: Option[String] = None,
-      instanceId: String = null): StreamingQuery = {
-    val lease = new WriterLease(events.sparkSession, tablePath,
-      WriterLease.identity(instanceId, checkpoint)).acquire()
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        lease.renew()
-        val changes = applyBatchCdf(batch.toDF(), keyField, tablePath, nBuckets, seqCol)
-        applyMinMaxDelta(changes, groupField, measureField, indexPath, viewPath)
-      }
-      .start()
-  }
-
-  /** Streamed CDC apply + per-batch exact moments maintenance —
-    * [[applyStreamWithView]] with the (n, Σv, Σv²) table, for the
-    * continuously-served mean/variance view ([[momentsView]]), and the
-    * same crash window between the replica and view writes.
-    */
-  def applyStreamWithMomentsView(events: DataFrame, keyField: String,
-      tablePath: String, aggPath: String,
-      groupField: String, measureField: String, checkpoint: String,
-      nBuckets: Int = 16, seqCol: Option[String] = None,
-      measureScale: Int = 0,
-      instanceId: String = null): StreamingQuery = {
-    val lease = new WriterLease(events.sparkSession, tablePath,
-      WriterLease.identity(instanceId, checkpoint)).acquire()
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        lease.renew()
-        val changes = applyBatchCdf(batch.toDF(), keyField, tablePath, nBuckets, seqCol)
-        applyMomentsDelta(changes, groupField, measureField, aggPath, measureScale)
-      }
-      .start()
   }
 
   /** The stored replica frame, robust to a FULLY-TRUNCATED table: a
@@ -952,16 +874,7 @@ object Materialize {
     val kept = all.filter($"bucket".isin(buckets.toIndexedSeq.map(Integer.valueOf): _*))
       .filter(!($"op" === Op.Delete && $"event_time" < lit(before)))
       .localCheckpoint(true) // lineage cut: we overwrite what we read
-    kept.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(tablePath)
-    // a bucket holding ONLY reclaimed tombstones produces no output rows,
-    // and dynamic overwrite would keep its stale file — drop it explicitly
-    val stillWritten = kept.select($"bucket").distinct().collect().map(_.getInt(0)).toSet
-    val fs = new Path(tablePath).getFileSystem(s.sparkContext.hadoopConfiguration)
-    (buckets.toSet -- stillWritten).foreach { b =>
-      fs.delete(new Path(tablePath, s"bucket=$b"), true)
-    }
+    // a bucket holding ONLY reclaimed tombstones empties and is deleted
+    rewriteBuckets(kept, tablePath, buckets.toSet)
   }
 }

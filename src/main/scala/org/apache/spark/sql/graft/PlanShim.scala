@@ -35,4 +35,12 @@ object PlanShim {
     */
   def cachedEntries(spark: SparkSession): Int =
     spark.asInstanceOf[CSparkSession].sharedState.cacheManager.numCachedEntries
+
+  /** A fresh directory `<prefix>-<uuid>` under `java.io.tmpdir`, deleted
+    * by Spark's shutdown hook when the JVM exits (`Utils.createTempDir`
+    * is `private[spark]`): scratch a query writes per invocation, and
+    * on-disk artifacts, cannot outlive the process.
+    */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getPath
 }

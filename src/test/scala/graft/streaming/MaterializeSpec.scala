@@ -186,7 +186,7 @@ class MaterializeSpec extends SparkSpec {
     assert(!new java.io.File(s"$base/public.ignored").exists())
   }
 
-  test("applyStreamWithView keeps the aggregate view current per batch") {
+  test("the onChanges hook keeps the aggregate view current per batch") {
     val base = Files.createTempDirectory("graft-view").toString
     val ckpt = Files.createTempDirectory("graft-view-ckpt").toString
     def evG(op: String, id: Int, min: Int, grp: String, m: Int) = {
@@ -195,8 +195,9 @@ class MaterializeSpec extends SparkSpec {
       else graft.model.ChangeEvent(ts(min), "public", "t", Map.empty, data, op)
     }
     val in = MemoryStream[graft.model.ChangeEvent](spark)
-    val q = Materialize.applyStreamWithView(in.toDF(), "id", s"$base/t",
-      s"$base/agg", groupField = "g", measureField = "m", checkpoint = ckpt, nBuckets = 2)
+    val q = Materialize.applyStream(in.toDF(), "id", s"$base/t", ckpt, nBuckets = 2,
+      onChanges = Materialize.applyAggregateDelta(_, groupField = "g",
+        measureField = "m", s"$base/agg"))
     def agg(): Map[String, (Long, Long)] =
       spark.read.parquet(s"$base/agg").collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -790,13 +791,13 @@ class MaterializeSpec extends SparkSpec {
     assert(idx == Map(("a", 300L) -> 2L, ("a", -4195L) -> 1L))
   }
 
-  test("applyStreamWithMinMaxView keeps the min/max view current per batch") {
+  test("the onChanges hook keeps the min/max view current per batch") {
     val base = Files.createTempDirectory("graft-minmax3").toString
     val ckpt = Files.createTempDirectory("graft-minmax3-ckpt").toString
     val in = MemoryStream[ChangeEvent](spark)
-    val q = Materialize.applyStreamWithMinMaxView(in.toDF(), "id", s"$base/t",
-      s"$base/idx", s"$base/view", groupField = "g", measureField = "m",
-      checkpoint = ckpt, nBuckets = 2)
+    val q = Materialize.applyStream(in.toDF(), "id", s"$base/t", ckpt, nBuckets = 2,
+      onChanges = Materialize.applyMinMaxDelta(_, groupField = "g", measureField = "m",
+        s"$base/idx", s"$base/view"))
     def view(): Map[String, (Long, Long, Long)] =
       Materialize.minMaxView(spark, s"$base/view").collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -810,13 +811,13 @@ class MaterializeSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("applyStreamWithMomentsView keeps the moments view current per batch") {
+  test("the onChanges hook keeps the moments view current per batch") {
     val base = Files.createTempDirectory("graft-moments2").toString
     val ckpt = Files.createTempDirectory("graft-moments2-ckpt").toString
     val in = MemoryStream[ChangeEvent](spark)
-    val q = Materialize.applyStreamWithMomentsView(in.toDF(), "id", s"$base/t",
-      s"$base/m", groupField = "g", measureField = "m",
-      checkpoint = ckpt, nBuckets = 2, measureScale = 2)
+    val q = Materialize.applyStream(in.toDF(), "id", s"$base/t", ckpt, nBuckets = 2,
+      onChanges = Materialize.applyMomentsDelta(_, groupField = "g", measureField = "m",
+        s"$base/m", measureScale = 2))
     def view(): Map[String, (Long, Long, Float, Float)] =
       Materialize.momentsView(spark, s"$base/m").collect()
         .map(r => r.getString(0) ->
@@ -828,6 +829,43 @@ class MaterializeSpec extends SparkSpec {
       in.addData(evD(Op.Delete, 2, 5, "a", "3.00"))
       q.processAllAvailable()
       assert(view() == Map("a" -> (1L, 100L, 100.0f, 0.0f)))
+    } finally q.stop()
+  }
+
+  test("one onChanges hook feeds count+sum and min/max views a 2-decimal measure") {
+    val base = Files.createTempDirectory("graft-hookviews").toString
+    val ckpt = Files.createTempDirectory("graft-hookviews-ckpt").toString
+    val in = MemoryStream[ChangeEvent](spark)
+    val q = Materialize.applyStream(in.toDF(), "id", s"$base/t", ckpt, nBuckets = 2,
+      onChanges = { changes =>
+        Materialize.applyAggregateDelta(changes, "g", "m", s"$base/agg", measureScale = 2)
+        Materialize.applyMinMaxDelta(changes, "g", "m", s"$base/idx", s"$base/view",
+          nBuckets = 2, measureScale = 2)
+      })
+    def agg(): Map[String, (Long, Long)] =
+      spark.read.parquet(s"$base/agg").collect()
+        .map(r => r.getAs[String]("grp") -> (r.getAs[Long]("n"), r.getAs[Long]("m"))).toMap
+    def view(): Map[String, (Long, Long, Long)] =
+      Materialize.minMaxView(spark, s"$base/view").collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    def bucketDirs(dir: String): Seq[String] =
+      Option(new java.io.File(dir).list()).map(_.toSeq).getOrElse(Seq.empty)
+        .filter(_.startsWith("bucket="))
+    val groups = Seq("a", "b", "c", "d", "e", "f")
+    try {
+      in.addData(groups.zipWithIndex.flatMap { case (g, i) =>
+        Seq(evD(Op.Insert, 2 * i, i, g, "10.25"), evD(Op.Insert, 2 * i + 1, i, g, "-3.50"))
+      }: _*)
+      q.processAllAvailable()
+      assert(agg() == groups.map(_ -> (2L, 675L)).toMap)
+      assert(view() == groups.map(_ -> (-350L, 1025L, 2L)).toMap)
+      in.addData(evD(Op.Update, 0, 20, "a", "7.01"), evD(Op.Delete, 1, 21, "a", "-3.50"))
+      q.processAllAvailable()
+      assert(agg()("a") == ((1L, 701L)))
+      assert(view()("a") == ((701L, 701L, 1L)))
+      // six groups spread over at most nBuckets = 2 group buckets
+      assert(bucketDirs(s"$base/idx").nonEmpty && bucketDirs(s"$base/idx").size <= 2)
+      assert(bucketDirs(s"$base/view").nonEmpty && bucketDirs(s"$base/view").size <= 2)
     } finally q.stop()
   }
 

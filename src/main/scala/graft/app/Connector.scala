@@ -27,12 +27,18 @@ import graft.streaming.{CdcPipeline, PipelineProbe}
   * HA failover (O21) is delegated to cluster-manager restart + checkpoint
   * recovery: a restarted connector resumes from the last committed batch,
   * the same "resume from last ACK" guarantee the slot gives the reference.
+  *
+  * `sink` is `kafka`, `parquet` (into `parquetOutDir`) or `replica` (a
+  * [[graft.streaming.Materialize]] table at `parquetOutDir`); any other
+  * name is rejected here, at construction.
   */
 final class Connector(
     spark: SparkSession,
     cfg: ConnectorConfig,
     sink: String = "kafka",
     parquetOutDir: String = "") {
+
+  CdcPipeline.requireKnownSink(sink)
 
   private val ready = new CountDownLatch(1)
   @volatile private var query: StreamingQuery = _

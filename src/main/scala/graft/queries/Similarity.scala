@@ -8,7 +8,36 @@ import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over the embeddings table
   * (`Array[Float]`, dim 64): brute-force cosine top-k as the exact
-  * baseline, and an IVF-bucketed variant as the 100 TB scale path.
+  * baseline, and IVF, LSH and quantized variants as the scale paths.
+  *
+  * Every ANN lane has one filter-and-refine shape: a candidate
+  * generator, then exact cosine, then top-K. Its stages are written
+  * once each, and the lanes are compositions of them:
+  *   - `queries`: the `vec_id % 100 = 0` query set as (qid, qe); its
+  *     predicate `isQuery` also picks the query rows of the binary code
+  *     frames (`queryCodes`). Every ANN lane.
+  *   - `nearestCells`: each row's n nearest k-means cells by cosine to
+  *     the centroid. Corpus assignment (n = 1, or `nAssign` for
+  *     `nearDupPairs`) and query probing (n = `nProbe`) alike:
+  *     writeIvfIndex, appendToIvfIndex, annIvfIndexed (q52), q51, q76,
+  *     q262 and nearDupPairs (q43, q268).
+  *   - the exact tail, `scoreExact` → `keepTopK` → `present`
+  *     (`exactTopK`): drop self-pairs, native cosine, rank by
+  *     (cos_sim DESC, nid), keep rnk ≤ k, project, order. q50, q51,
+  *     q52, q63, q76 and q197 run all of it; q57 puts its distinct
+  *     between scoring and ranking; q117 ranks its top 4 into retrieval
+  *     metrics; both halves of `rerankAndGrade` (q261, q262) rank
+  *     without presenting.
+  *   - `refineShortlist`: each query's top `rerank` candidates by an
+  *     approximate score, then the survivors-only fetch of their real
+  *     vectors into the exact tail. q63 (PQ ADC), q76 (IVF-PQ ADC) and
+  *     q197 (SQ8 asymmetric cosine).
+  *   - `hammingShortlist`: each query's top `BinShortlist` candidates by
+  *     sign-code Hamming distance. q261, q262.
+  *   - `trainingSample`: the bounded hash-ordered driver sample (and
+  *     `normalizedSample`, its L2 normalization) under trainCodebook,
+  *     trainPqCodebook and trainSq8.
+  *   - `dot`: the DuckDB oracles' ordered-fold dot product.
   *
   * Cosine is computed by the native codegen'd CosineSimilarity expression
   * with sequential double accumulation — the same left-to-right summation
@@ -39,30 +68,129 @@ object Similarity {
     call_function("cosine_similarity", a, b)
   }
 
+  /** The query set's predicate: every 100th vector. */
+  private val isQuery: Column = col("vec_id") % 100 === 0
+
+  /** The query set as (qid, qe), plus `extra` columns computed from the
+    * same embeddings rows.
+    */
+  private def queries(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(isQuery)
+      .select(Seq(col("vec_id").as("qid"), col("embedding").as("qe")) ++ extra: _*)
+
+  /** Each row of `frame` with the cid of each of its `n` nearest cells
+    * of the codebook `cent` (cid, ce): cosine of `vec` to the centroid,
+    * ties to the lower cid, ranked per `key`. Only the C×dim codebook is
+    * broadcast.
+    */
+  private def nearestCells(frame: DataFrame, key: String, vec: String,
+      cent: DataFrame, n: Int): DataFrame = {
+    val s = frame.sparkSession
+    import s.implicits._
+    val w = Window.partitionBy(col(key)).orderBy($"csim".desc, $"cid")
+    frame.crossJoin(broadcast(cent))
+      .withColumn("csim", cosine(s, col(vec), $"ce"))
+      .withColumn("crnk", row_number().over(w))
+      .filter($"crnk" <= n)
+      .drop("ce", "csim", "crnk")
+  }
+
+  /** Drop self-pairs from (qid, qe, nid, ne) candidates and score the
+    * rest by exact cosine.
+    */
+  private def scoreExact(s: SparkSession, pairs: DataFrame): DataFrame = {
+    import s.implicits._
+    pairs.filter($"nid" =!= $"qid")
+      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
+  }
+
+  /** Each query's `k` best scored rows, `rnk` 1..k by (cos_sim DESC,
+    * nid): the rank-filter window becomes a per-partition top-k heap
+    * plus a k-row merge (WindowGroupLimit).
+    */
+  private def keepTopK(scored: DataFrame, k: Int = K): DataFrame = {
+    val s = scored.sparkSession
+    import s.implicits._
+    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
+    scored.withColumn("rnk", row_number().over(w)).filter($"rnk" <= k)
+  }
+
+  /** The ANN output contract: (qid, rnk, nid, cos_sim) in (qid, rnk)
+    * order.
+    */
+  private def present(ranked: DataFrame): DataFrame = {
+    val s = ranked.sparkSession
+    import s.implicits._
+    ranked.select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"cos_sim")
+      .orderBy($"qid", $"rnk")
+  }
+
+  /** The exact tail every candidate generator feeds. */
+  private def exactTopK(s: SparkSession, pairs: DataFrame): DataFrame =
+    present(keepTopK(scoreExact(s, pairs)))
+
+  /** Refine approximate (qid, qe, nid) candidates: keep each query's
+    * top `rerank` by the `approx` score (ties to the lower nid,
+    * self-pairs dropped first), then fetch only those survivors' real
+    * vectors — a rerank×queries-row join back to `e`, never a
+    * corpus-wide float scan — into the exact tail.
+    */
+  private def refineShortlist(s: SparkSession, e: DataFrame, pairs: DataFrame,
+      approx: Column, rerank: Int): DataFrame = {
+    import s.implicits._
+    val w = Window.partitionBy($"qid").orderBy($"approx".desc, $"nid")
+    val survivors = pairs.filter($"nid" =!= $"qid")
+      .withColumn("approx", approx)
+      .withColumn("arnk", row_number().over(w))
+      .filter($"arnk" <= rerank)
+      .select($"qid", $"qe", $"nid")
+    val fetch = e.select($"vec_id".as("nid"), $"embedding".as("ne"))
+    exactTopK(s, survivors.join(fetch, "nid"))
+  }
+
+  /** The bounded codebook-training sample: the first `sampleCap`
+    * vectors in xxhash64(vec_id) order, collected to the driver. No RNG,
+    * insensitive to input file order, and at most `sampleCap` rows
+    * whatever the corpus size (at 100 TB too — exactly how production
+    * codebooks are trained).
+    */
+  private def trainingSample(e: DataFrame, sampleCap: Int): Array[Array[Float]] = {
+    val s = e.sparkSession
+    import s.implicits._
+    e.orderBy(xxhash64($"vec_id"), $"vec_id")
+      .select($"embedding").limit(sampleCap)
+      .collect()
+      .map(_.getSeq[Float](0).toArray)
+  }
+
+  /** `trainingSample` in double precision, each vector L2-normalized (a
+    * zero vector stays zero).
+    */
+  private def normalizedSample(e: DataFrame, sampleCap: Int): Array[Array[Double]] =
+    trainingSample(e, sampleCap).map { f =>
+      val v = f.map(_.toDouble)
+      val n = math.sqrt(v.map(x => x * x).sum)
+      if (n == 0.0) v else v.map(_ / n)
+    }
+
+  /** The oracles' dot product: DuckDB's ordered `list_sum` fold, which
+    * the native cosine reproduces bit for bit.
+    */
+  private def dot(a: String, b: String) =
+    s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+
   /** Brute-force cosine top-k: broadcast the query set, one scan of the
-    * corpus, per-partition top-k heap + k-row merge (TakeOrdered via the
-    * rank-filter window on qid). The exact baseline every ANN variant is
+    * corpus into the exact tail. The exact baseline every ANN variant is
     * measured against.
     */
   def q50AnnBrute(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.load(s, dir, "embeddings")
-    val q = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    e.select($"vec_id".as("nid"), $"embedding".as("ne"))
-      .crossJoin(broadcast(q))
-      .filter($"nid" =!= $"qid")
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= K)
-      .select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"cos_sim")
-      .orderBy($"qid", $"rnk")
+    exactTopK(s, e.select($"vec_id".as("nid"), $"embedding".as("ne"))
+      .crossJoin(broadcast(queries(e))))
   }
 
-  val q50AnnBruteSql: String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+  val q50AnnBruteSql: String =
     s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 100 = 0),
       |scored AS (
       |  SELECT qid, e.vec_id AS nid,
@@ -73,31 +201,20 @@ object Similarity {
       |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, nid) AS rnk
       |      FROM scored)
       |WHERE rnk <= $K ORDER BY qid, rnk""".stripMargin
-  }
 
   /** Deterministic sampled k-means codebook (the FAISS IVF training
-    * recipe re-expressed for Spark): hash-order the corpus, collect a
-    * BOUNDED training sample to the driver (cap, not corpus-sized — at
-    * 100 TB the sample stays ≤ `sampleCap` rows regardless of corpus
-    * size, exactly how production IVF codebooks are trained), run
-    * Lloyd's iterations locally with cosine assignment + renormalized
-    * mean update, and return the centroids as a tiny (C × dim) frame
-    * for broadcast. Deterministic end-to-end: the sample is the
-    * xxhash64(vec_id) order (no RNG), seeds are evenly spaced in that
-    * order, and Lloyd's is a pure function of the sample.
+    * recipe re-expressed for Spark): run Lloyd's iterations locally over
+    * the normalized bounded `trainingSample`, with cosine assignment +
+    * renormalized mean update, and return the centroids as a tiny
+    * (C × dim) frame for broadcast. Deterministic end-to-end: the
+    * sample is hash-ordered, seeds are evenly spaced in that order, and
+    * Lloyd's is a pure function of the sample.
     */
   def trainCodebook(
       e: DataFrame, c: Int, iters: Int = 8, sampleCap: Int = 65536): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    val sample = e.orderBy(xxhash64($"vec_id"), $"vec_id")
-      .select($"embedding").limit(sampleCap)
-      .collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    val normed = sample.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
+    val normed = normalizedSample(e, sampleCap)
     if (normed.isEmpty) // empty corpus: empty codebook, queries stay empty
       return Seq.empty[(Int, Array[Float])].toDF("cid", "ce")
     val k = math.min(c, normed.length)
@@ -168,14 +285,9 @@ object Similarity {
       nCells: Int, nAssign: Int, tau: Double = NearDupTau): DataFrame = {
     import s.implicits._
     val e = Tables.load(s, dir, "embeddings")
-    val cent = trainCodebook(e, nCells)
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
     // materialize once: both self-join branches reference this frame, and
     // without it the corpus-wide assignment window executes twice per run
-    val assigned = e.crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"embedding", $"ce"))
-      .withColumn("arnk", row_number().over(wAssign))
-      .filter($"arnk" <= nAssign)
+    val assigned = nearestCells(e, "vec_id", "embedding", trainCodebook(e, nCells), nAssign)
       .select($"vec_id", $"embedding", $"cid")
       .localCheckpoint(true)
     val a = assigned.select($"vec_id".as("d1"), $"embedding".as("x"), $"cid")
@@ -244,9 +356,7 @@ object Similarity {
       .orderBy($"vec_id")
   }
 
-  val q268SemDedupSql: String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+  val q268SemDedupSql: String =
     s"""WITH pairs AS (
       |  SELECT a.vec_id AS d1, b.vec_id AS d2,
       |    ${dot("a.embedding", "b.embedding")} /
@@ -259,11 +369,8 @@ object Similarity {
       |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY d2 ORDER BY d1) AS rk
       |      FROM pairs)
       |WHERE rk = 1 ORDER BY vec_id""".stripMargin
-  }
 
-  val q43EmbedNearDupSql: String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+  val q43EmbedNearDupSql: String =
     s"""SELECT a.vec_id AS d1, b.vec_id AS d2,
       |  ${dot("a.embedding", "b.embedding")} /
       |  (sqrt(${dot("a.embedding", "a.embedding")}) * sqrt(${dot("b.embedding", "b.embedding")})) AS cos_sim
@@ -272,7 +379,6 @@ object Similarity {
       |  AND ${dot("a.embedding", "b.embedding")} /
       |      (sqrt(${dot("a.embedding", "a.embedding")}) * sqrt(${dot("b.embedding", "b.embedding")})) >= $NearDupTau
       |ORDER BY d1, d2""".stripMargin
-  }
 
   /** Persist the corpus as an IVF index TABLE: vectors partitioned by
     * their k-means cell id, centroids alongside. This is the serving
@@ -287,11 +393,7 @@ object Similarity {
     import s.implicits._
     val e = Tables.load(s, dir, "embeddings")
     val cent = trainCodebook(e, nCentroids)
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
-    e.crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"embedding", $"ce"))
-      .withColumn("arnk", row_number().over(wAssign))
-      .filter($"arnk" === 1)
+    nearestCells(e, "vec_id", "embedding", cent, 1)
       .select($"vec_id", $"embedding", $"cid")
       .write.mode("overwrite").partitionBy("cid").parquet(s"$indexPath/cells")
     cent.write.mode("overwrite").parquet(s"$indexPath/centroids")
@@ -306,25 +408,13 @@ object Similarity {
   def annIvfIndexed(
       s: SparkSession, indexPath: String, queries: DataFrame, nProbe: Int = 2): DataFrame = {
     import s.implicits._
-    val cent = s.read.parquet(s"$indexPath/centroids")
-    val wProbe = Window.partitionBy($"qid").orderBy($"csim".desc, $"cid")
-    val probes = queries.crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"qe", $"ce"))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter($"prnk" <= nProbe)
-      .select($"qid", $"qe", $"cid")
+    val probes = nearestCells(queries.select($"qid", $"qe"), "qid", "qe",
+      s.read.parquet(s"$indexPath/centroids"), nProbe)
     val probedCells = probes.select($"cid").distinct().collect().map(_.getInt(0))
     val cells = s.read.parquet(s"$indexPath/cells")
       .filter($"cid".isin(probedCells.toIndexedSeq.map(Integer.valueOf): _*)) // partition-pruned
       .select($"vec_id".as("nid"), $"embedding".as("ne"), $"cid")
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    probes.join(cells, "cid")
-      .filter($"nid" =!= $"qid")
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= K)
-      .select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"cos_sim")
-      .orderBy($"qid", $"rnk")
+    exactTopK(s, probes.join(cells, "cid"))
   }
 
   /** Incremental maintenance of a persisted IVF index: assign each new
@@ -337,14 +427,8 @@ object Similarity {
     */
   def appendToIvfIndex(s: SparkSession, indexPath: String, vectors: DataFrame): Unit = {
     import s.implicits._
-    val cent = s.read.parquet(s"$indexPath/centroids")
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
-    vectors.select($"vec_id", $"embedding")
-      .crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"embedding", $"ce"))
-      .withColumn("arnk", row_number().over(wAssign))
-      .filter($"arnk" === 1)
-      .select($"vec_id", $"embedding", $"cid")
+    nearestCells(vectors.select($"vec_id", $"embedding"), "vec_id", "embedding",
+        s.read.parquet(s"$indexPath/centroids"), 1)
       .write.mode("append").partitionBy("cid").parquet(s"$indexPath/cells")
   }
 
@@ -377,24 +461,9 @@ object Similarity {
     // cache_build_sec and clear deletes the directory
     val indexPath = FamilyCaches.memoDir(s, s"ivfIndex:$nCentroids:$dir",
       "graft_ivf_index")(writeIvfIndex(s, dir, _, nCentroids))
-    val q = Tables.load(s, dir, "embeddings")
-      .filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    annIvfIndexed(s, indexPath, q, nProbe)
+    annIvfIndexed(s, indexPath, queries(Tables.load(s, dir, "embeddings")), nProbe)
   }
 
-  /** IVF-bucketed ANN — the scale path: assign every vector to its nearest
-    * of C k-means centroids (deterministic sampled training — see
-    * trainCodebook), then probe only the `nprobe` nearest centroid
-    * buckets per query. At 100 TB: the corpus is partitioned by
-    * centroid id (one shuffle, or a bucketed table layout), each query
-    * touches ~nprobe/C of the data, and k-means cells are balanced by
-    * construction (arbitrary fixed vectors as the codebook — the round-2
-    * form — gave arbitrary cell balance; a skewed cell at scale recreates
-    * exactly the hot-partition problem IVF exists to avoid). Approximate
-    * by construction — recall vs q50 is asserted in the test suite, not
-    * by the SQL oracle.
-    */
   /** The gate-registered IVF forms run FULL PROBE (nProbe = C): every
     * corpus vector sits in exactly one cell and the probe set covers all
     * cells, so each (query, vector) pair is scored exactly once and the
@@ -444,20 +513,13 @@ object Similarity {
     // multi-probe masks: all signature perturbations with ≤ probeRadius
     // bits flipped (probeRadius = nBits ⇒ every bucket ⇒ provably exact)
     val masks = (0 until (1 << nBits)).filter(m => Integer.bitCount(m) <= probeRadius)
-    val probes = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"), explode(sigs($"embedding")).as("tb"))
+    val probes = queries(e, explode(sigs($"embedding")).as("tb"))
       .select($"qid", $"qe", $"tb.t".as("t"),
         explode(array(masks.map(m => ($"tb.bkt".bitwiseXOR(lit(m)))): _*)).as("bkt"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    corpus.join(broadcast(probes), Seq("t", "bkt"))
-      .filter($"nid" =!= $"qid")
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
+    val scored = scoreExact(s, corpus.join(broadcast(probes), Seq("t", "bkt")))
       .select($"qid", $"nid", $"cos_sim")
       .distinct() // a pair found by several tables/probes collapses exactly
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= K)
-      .select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"cos_sim")
-      .orderBy($"qid", $"rnk")
+    present(keepTopK(scored))
   }
 
   /** The gate-registered SRP form: ONE table, probe radius = nBits — the
@@ -474,28 +536,18 @@ object Similarity {
     q57AnnSrp(s, dir, nBits = 6, nTables = 1, probeRadius = 6)
 
   /** Per-sub-space PQ codebook training (the FAISS PQ recipe under the
-    * same bounded-sample discipline as [[trainCodebook]]): collect a
-    * deterministic hash-ordered sample capped at `sampleCap` rows,
-    * L2-normalize, and run Lloyd's independently per sub-space with L2
-    * assignment over sub-vectors. Returns the flat row-major
-    * (m × k × subDim) float codebook that `pq_encode`/`pq_lut` carry
-    * as a codegen constant. Deterministic end-to-end — no RNG, seeds
-    * evenly spaced in hash order, pure function of the sample.
+    * same bounded-sample discipline as [[trainCodebook]]): over the
+    * normalized `trainingSample`, run Lloyd's independently per
+    * sub-space with L2 assignment over sub-vectors. Returns the flat
+    * row-major (m × k × subDim) float codebook that `pq_encode`/`pq_lut`
+    * carry as a codegen constant. Deterministic end-to-end — no RNG,
+    * seeds evenly spaced in hash order, pure function of the sample.
     */
   def trainPqCodebook(
       e: DataFrame, m: Int, k: Int, iters: Int = 8, sampleCap: Int = 65536): Array[Float] = {
-    val s = e.sparkSession
-    import s.implicits._
     val subDim = Dim / m
     require(m * subDim == Dim, s"trainPqCodebook: m=$m must divide dim=$Dim")
-    val sample = e.orderBy(xxhash64($"vec_id"), $"vec_id")
-      .select($"embedding").limit(sampleCap)
-      .collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    val normed = sample.map { v =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0.0) v else v.map(_ / n)
-    }
+    val normed = normalizedSample(e, sampleCap)
     val flat = new Array[Float](m * k * subDim)
     if (normed.isEmpty) return flat // empty corpus: zero codebook, queries stay empty
     for (sub <- 0 until m) {
@@ -549,26 +601,9 @@ object Similarity {
     val cb = typedLit(trainPqCodebook(e, m, k))
     val corpus = e.select($"vec_id".as("nid"),
       call_function("pq_encode", $"embedding", cb, lit(m), lit(k)).as("codes"))
-    val q = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"),
-        call_function("pq_lut", $"embedding", cb, lit(m), lit(k)).as("lut"))
-    val wAdc = Window.partitionBy($"qid").orderBy($"adc".desc, $"nid")
-    val cands = corpus.crossJoin(broadcast(q))
-      .filter($"nid" =!= $"qid")
-      .withColumn("adc", call_function("pq_adc", $"lut", $"codes"))
-      .withColumn("crnk", row_number().over(wAdc))
-      .filter($"crnk" <= rerank)
-      .select($"qid", $"qe", $"nid")
-    // re-rank fetch: survivors only — the full-vector table is touched
-    // for rerank×queries rows, never scanned corpus-wide
-    val fetch = e.select($"vec_id".as("nid"), $"embedding".as("ne"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    cands.join(fetch, "nid")
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= K)
-      .select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"cos_sim")
-      .orderBy($"qid", $"rnk")
+    val q = queries(e, call_function("pq_lut", $"embedding", cb, lit(m), lit(k)).as("lut"))
+    refineShortlist(s, e, corpus.crossJoin(broadcast(q)),
+      call_function("pq_adc", $"lut", $"codes"), rerank)
   }
 
   /** The gate-registered PQ form: re-rank budget covers the whole
@@ -601,39 +636,16 @@ object Similarity {
     val cent = trainCodebook(e, nCentroids)
     val cb = typedLit(trainPqCodebook(e, m, k))
     // corpus side: cell id (IVF) + codes (PQ) — no full vectors carried
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
-    val assigned = e.crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"embedding", $"ce"))
-      .withColumn("arnk", row_number().over(wAssign))
-      .filter($"arnk" === 1)
+    val assigned = nearestCells(e, "vec_id", "embedding", cent, 1)
       .select($"vec_id".as("nid"),
         call_function("pq_encode", $"embedding", cb, lit(m), lit(k)).as("codes"),
         $"cid")
     // query side: probed cells + ADC lookup table
-    val q = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val wProbe = Window.partitionBy($"qid").orderBy($"csim".desc, $"cid")
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"qe", $"ce"))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter($"prnk" <= nProbe)
+    val probes = nearestCells(queries(e), "qid", "qe", cent, nProbe)
       .select($"qid", $"qe",
         call_function("pq_lut", $"qe", cb, lit(m), lit(k)).as("lut"), $"cid")
-    val wAdc = Window.partitionBy($"qid").orderBy($"adc".desc, $"nid")
-    val cands = probes.join(assigned, "cid")
-      .filter($"nid" =!= $"qid")
-      .withColumn("adc", call_function("pq_adc", $"lut", $"codes"))
-      .withColumn("crnk", row_number().over(wAdc))
-      .filter($"crnk" <= rerank)
-      .select($"qid", $"qe", $"nid")
-    val fetch = e.select($"vec_id".as("nid"), $"embedding".as("ne"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    cands.join(fetch, "nid")
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= K)
-      .select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"cos_sim")
-      .orderBy($"qid", $"rnk")
+    refineShortlist(s, e, probes.join(assigned, "cid"),
+      call_function("pq_adc", $"lut", $"codes"), rerank)
   }
 
   /** Gate-registered IVF-PQ: full probe (every cell) AND full re-rank
@@ -651,15 +663,8 @@ object Similarity {
     * sample stays ≤ `sampleCap` rows regardless of corpus size).
     */
   def trainSq8(e: DataFrame,
-      sampleCap: Int = 65536): (Array[Float], Array[Float]) = {
-    val s = e.sparkSession
-    import s.implicits._
-    val sample = e.orderBy(xxhash64($"vec_id"), $"vec_id")
-      .select($"embedding").limit(sampleCap)
-      .collect()
-      .map(_.getSeq[Float](0).toArray)
-    graft.functions.ScalarQuantizer.train(sample, Dim)
-  }
+      sampleCap: Int = 65536): (Array[Float], Array[Float]) =
+    graft.functions.ScalarQuantizer.train(trainingSample(e, sampleCap), Dim)
 
   /** q197: SQ8 scalar-quantized ANN — the fourth quantizer rung
     * (FAISS `IndexScalarQuantizer`): every dimension maps onto its own
@@ -683,24 +688,8 @@ object Similarity {
     val scalesL = typedLit(scales)
     val corpus = e.select($"vec_id".as("nid"),
       call_function("sq8_encode", $"embedding", minsL, scalesL).as("codes"))
-    val q = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val wApprox = Window.partitionBy($"qid").orderBy($"approx".desc, $"nid")
-    val cands = corpus.crossJoin(broadcast(q))
-      .filter($"nid" =!= $"qid")
-      .withColumn("approx",
-        call_function("sq8_cos", $"qe", $"codes", minsL, scalesL))
-      .withColumn("crnk", row_number().over(wApprox))
-      .filter($"crnk" <= rerank)
-      .select($"qid", $"qe", $"nid")
-    val fetch = e.select($"vec_id".as("nid"), $"embedding".as("ne"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    cands.join(fetch, "nid")
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= K)
-      .select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"cos_sim")
-      .orderBy($"qid", $"rnk")
+    refineShortlist(s, e, corpus.crossJoin(broadcast(queries(e))),
+      call_function("sq8_cos", $"qe", $"codes", minsL, scalesL), rerank)
   }
 
   /** Gate-registered SQ8 form: full re-rank (every candidate
@@ -773,9 +762,7 @@ object Similarity {
       .orderBy($"label")
   }
 
-  def q212KnnEvalSql(k: Int = 3): String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+  def q212KnnEvalSql(k: Int = 3): String =
     s"""WITH scored AS (
       |  SELECT q.vec_id AS qid, q.label AS true_label,
       |    e.vec_id AS nid, e.label AS nlabel,
@@ -800,37 +787,27 @@ object Similarity {
       |  CAST(SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END) AS DOUBLE)
       |    / COUNT(*) AS accuracy
       |FROM pred GROUP BY 1 ORDER BY label""".stripMargin
-  }
 
+  /** IVF-bucketed ANN — the scale path: assign every vector to its nearest
+    * of C k-means centroids (deterministic sampled training — see
+    * trainCodebook), then probe only the `nprobe` nearest centroid
+    * buckets per query. At 100 TB: the corpus is partitioned by
+    * centroid id (one shuffle, or a bucketed table layout), each query
+    * touches ~nprobe/C of the data, and k-means cells are balanced by
+    * construction (arbitrary fixed vectors as the codebook — the round-2
+    * form — gave arbitrary cell balance; a skewed cell at scale recreates
+    * exactly the hot-partition problem IVF exists to avoid). Approximate
+    * by construction — recall vs q50 is asserted in the test suite, not
+    * by the SQL oracle.
+    */
   def q51AnnIvf(s: SparkSession, dir: String, nCentroids: Int = 8, nProbe: Int = 2): DataFrame = {
     import s.implicits._
     val e = Tables.load(s, dir, "embeddings")
     val cent = trainCodebook(e, nCentroids)
-    // assign: nearest centroid per corpus vector (broadcast C centroids)
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
-    val assigned = e.crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"embedding", $"ce"))
-      .withColumn("arnk", row_number().over(wAssign))
-      .filter($"arnk" === 1)
+    val assigned = nearestCells(e, "vec_id", "embedding", cent, 1)
       .select($"vec_id".as("nid"), $"embedding".as("ne"), $"cid")
-    // probe: nprobe nearest centroids per query
-    val q = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val wProbe = Window.partitionBy($"qid").orderBy($"csim".desc, $"cid")
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"qe", $"ce"))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter($"prnk" <= nProbe)
-      .select($"qid", $"qe", $"cid")
     // search only the probed buckets
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    probes.join(assigned, "cid")
-      .filter($"nid" =!= $"qid")
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= K)
-      .select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"cos_sim")
-      .orderBy($"qid", $"rnk")
+    exactTopK(s, nearestCells(queries(e), "qid", "qe", cent, nProbe).join(assigned, "cid"))
   }
 
   /** q111: SEMANTIC eval-set decontamination — the embedding-space twin
@@ -875,15 +852,9 @@ object Similarity {
   def q117RetrievalEval(s: SparkSession, dir: String, k: Int = 4): DataFrame = {
     import s.implicits._
     val e = Tables.load(s, dir, "embeddings")
-    val q = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"), $"label".as("q_label"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    e.select($"vec_id".as("nid"), $"embedding".as("ne"), $"label".as("n_label"))
-      .crossJoin(broadcast(q))
-      .filter($"nid" =!= $"qid")
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
+    val pairs = e.select($"vec_id".as("nid"), $"embedding".as("ne"), $"label".as("n_label"))
+      .crossJoin(broadcast(queries(e, $"label".as("q_label"))))
+    keepTopK(scoreExact(s, pairs), k)
       .groupBy($"qid", $"q_label")
       .agg(
         coalesce(max(when($"n_label" === $"q_label", lit(1.0) / $"rnk")), lit(0.0))
@@ -894,9 +865,7 @@ object Similarity {
       .orderBy($"qid")
   }
 
-  val q117RetrievalEvalSql: String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+  val q117RetrievalEvalSql: String =
     s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe, label AS q_label
       |           FROM embeddings WHERE vec_id % 100 = 0),
       |scored AS (
@@ -914,11 +883,8 @@ object Similarity {
       |  SUM(CASE WHEN n_label = q_label THEN 1 ELSE 0 END) / 4 AS precision_at_k
       |FROM ranked WHERE rnk <= 4
       |GROUP BY qid, q_label ORDER BY qid""".stripMargin
-  }
 
-  val q111SemanticDecontamSql: String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
+  val q111SemanticDecontamSql: String =
     s"""WITH ev AS (SELECT vec_id AS eid, embedding AS ee FROM embeddings WHERE vec_id % 20 = 0),
       |scored AS (
       |  SELECT e.vec_id AS nid,
@@ -929,7 +895,6 @@ object Similarity {
       |  CAST(SUM(CASE WHEN cos_sim > 0.6 THEN 1 ELSE 0 END) AS BIGINT) AS n_over,
       |  max(cos_sim) > 0.6 AS contaminated
       |FROM scored GROUP BY nid ORDER BY nid""".stripMargin
-  }
 
   /** q150: nearest-centroid label purity — the label-noise screen an
     * embedding pipeline runs before trusting its labels: per-label
@@ -1099,6 +1064,59 @@ object Similarity {
   /** Hamming-shortlist size for q261 (rerank pool per query). */
   private val BinShortlist = 16
 
+  /** Sign codes (two 32-bit halves) for every vector — shared by the
+    * brute q261 and the IVF-bucketed q262.
+    */
+  private def binCodes(e: DataFrame): DataFrame = {
+    val s = e.sparkSession
+    import s.implicits._
+    def half(h: Int): Column =
+      aggregate(sequence(lit(0), lit(31)), lit(0L),
+        (acc, i) => acc + when(get($"embedding", lit(32 * h) + i) > lit(0.0),
+          pow(lit(2.0), i).cast("long")).otherwise(lit(0L)))
+    e.select($"vec_id", half(0).as("c0"), half(1).as("c1"))
+  }
+
+  /** The query rows of a sign-code frame as (qid, q0, q1). */
+  private def queryCodes(codes: DataFrame): DataFrame =
+    codes.filter(isQuery).select(col("vec_id").as("qid"), col("c0").as("q0"), col("c1").as("q1"))
+
+  /** Each query's top `BinShortlist` (qid, nid, hamming) over
+    * (qid, q0, q1, nid, c0, c1) candidate pairs: self-pairs dropped,
+    * sign-code Hamming distance ascending, ties to the lower nid.
+    */
+  private def hammingShortlist(pairs: DataFrame): DataFrame = {
+    val s = pairs.sparkSession
+    import s.implicits._
+    val w = Window.partitionBy($"qid").orderBy($"hamming", $"nid")
+    pairs.filter($"nid" =!= $"qid")
+      .withColumn("hamming",
+        (bit_count($"c0".bitwiseXOR($"q0"))
+          + bit_count($"c1".bitwiseXOR($"q1"))).cast("long"))
+      .withColumn("hr", row_number().over(w))
+      .filter($"hr" <= BinShortlist)
+      .select($"qid", $"nid", $"hamming")
+  }
+
+  /** Cosine-rerank a Hamming shortlist to top-[[K]] and grade each row
+    * against the exact full-cosine top-K (`in_exact_topk`) — the shared
+    * tail of q261/q262.
+    */
+  private def rerankAndGrade(s: SparkSession, e: DataFrame,
+      shortlist: DataFrame): DataFrame = {
+    import s.implicits._
+    val qe = queries(e)
+    val fetch = e.select($"vec_id".as("nid"), $"embedding".as("ne"))
+    val reranked = keepTopK(scoreExact(s,
+      shortlist.join(fetch, Seq("nid")).join(broadcast(qe), Seq("qid"))))
+    val exact = keepTopK(scoreExact(s, fetch.crossJoin(broadcast(qe))))
+      .select($"qid", $"nid", lit(true).as("hit"))
+    reranked.join(exact, Seq("qid", "nid"), "left")
+      .select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"hamming",
+        $"cos_sim", coalesce($"hit", lit(false)).as("in_exact_topk"))
+      .orderBy($"qid", $"rnk")
+  }
+
   /** q261 — binary (sign) quantization ANN: the 1-bit rung of the
     * quantization ladder under PQ (q63) and SQ8. Each 64-dim vector
     * compresses to TWO 32-bit sign codes (bit i of half h set iff
@@ -1119,67 +1137,14 @@ object Similarity {
     * exact-truth branch (full cosine) is the deliberate grading
     * baseline, exactly q50's shape.
     */
-  /** Sign codes (two 32-bit halves) for every vector — shared by the
-    * brute q261 and the IVF-bucketed q262.
-    */
-  private def binCodes(e: DataFrame): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    def half(h: Int): Column =
-      aggregate(sequence(lit(0), lit(31)), lit(0L),
-        (acc, i) => acc + when(get($"embedding", lit(32 * h) + i) > lit(0.0),
-          pow(lit(2.0), i).cast("long")).otherwise(lit(0L)))
-    e.select($"vec_id", half(0).as("c0"), half(1).as("c1"))
-  }
-
-  /** Cosine-rerank a Hamming shortlist to top-[[K]] and grade each row
-    * against the exact full-cosine top-K (`in_exact_topk`) — the shared
-    * tail of q261/q262.
-    */
-  private def rerankAndGrade(s: SparkSession, e: DataFrame,
-      shortlist: DataFrame): DataFrame = {
-    import s.implicits._
-    val qe = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val wc = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    val reranked = shortlist
-      .join(e.select($"vec_id".as("nid"), $"embedding".as("ne")), Seq("nid"))
-      .join(broadcast(qe), Seq("qid"))
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
-      .withColumn("rnk", row_number().over(wc))
-      .filter($"rnk" <= K)
-    val exact = e.select($"vec_id".as("nid"), $"embedding".as("ne"))
-      .crossJoin(broadcast(qe))
-      .filter($"nid" =!= $"qid")
-      .withColumn("cos_sim", cosine(s, $"qe", $"ne"))
-      .withColumn("xr", row_number().over(wc))
-      .filter($"xr" <= K)
-      .select($"qid", $"nid", lit(true).as("hit"))
-    reranked.join(exact, Seq("qid", "nid"), "left")
-      .select($"qid", $"rnk".cast("long").as("rnk"), $"nid", $"hamming",
-        $"cos_sim", coalesce($"hit", lit(false)).as("in_exact_topk"))
-      .orderBy($"qid", $"rnk")
-  }
-
   def q261AnnBinaryHamming(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.load(s, dir, "embeddings")
     val codes = binCodes(e)
       .localCheckpoint(true) // corpus side AND query side probe it
-    val q = codes.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"c0".as("q0"), $"c1".as("q1"))
-    val wh = Window.partitionBy($"qid").orderBy($"hamming", $"nid")
-    val shortlist = codes
+    rerankAndGrade(s, e, hammingShortlist(codes
       .select($"vec_id".as("nid"), $"c0", $"c1")
-      .crossJoin(broadcast(q))
-      .filter($"nid" =!= $"qid")
-      .withColumn("hamming",
-        (bit_count($"c0".bitwiseXOR($"q0"))
-          + bit_count($"c1".bitwiseXOR($"q1"))).cast("long"))
-      .withColumn("hr", row_number().over(wh))
-      .filter($"hr" <= BinShortlist)
-      .select($"qid", $"nid", $"hamming")
-    rerankAndGrade(s, e, shortlist)
+      .crossJoin(broadcast(queryCodes(codes)))))
   }
 
   /** q262 — IVF-bucketed binary ANN: the BUCKETED scale path the q261
@@ -1207,34 +1172,13 @@ object Similarity {
     import s.implicits._
     val e = Tables.load(s, dir, "embeddings")
     val cent = trainCodebook(e, nCells)
-    val wA = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
-    val assigned = e.crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"embedding", $"ce"))
-      .withColumn("r", row_number().over(wA)).filter($"r" === 1)
-      .select($"vec_id", $"cid")
+    val assigned = nearestCells(e, "vec_id", "embedding", cent, 1).select($"vec_id", $"cid")
     val codes = binCodes(e).join(assigned, Seq("vec_id"))
       .localCheckpoint(true) // corpus candidates AND the query code probe
-    val wP = Window.partitionBy($"qid").orderBy($"csim".desc, $"cid")
-    val probes = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"))
-      .crossJoin(broadcast(cent))
-      .withColumn("csim", cosine(s, $"qe", $"ce"))
-      .withColumn("pr", row_number().over(wP)).filter($"pr" <= nProbe)
-      .select($"qid", $"cid")
-    val qcodes = codes.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"c0".as("q0"), $"c1".as("q1"))
-    val wh = Window.partitionBy($"qid").orderBy($"hamming", $"nid")
-    val shortlist = probes
+    val probes = nearestCells(queries(e), "qid", "qe", cent, nProbe).select($"qid", $"cid")
+    rerankAndGrade(s, e, hammingShortlist(probes
       .join(codes.select($"cid", $"vec_id".as("nid"), $"c0", $"c1"), Seq("cid"))
-      .join(broadcast(qcodes), Seq("qid"))
-      .filter($"nid" =!= $"qid")
-      .withColumn("hamming",
-        (bit_count($"c0".bitwiseXOR($"q0"))
-          + bit_count($"c1".bitwiseXOR($"q1"))).cast("long"))
-      .withColumn("hr", row_number().over(wh))
-      .filter($"hr" <= BinShortlist)
-      .select($"qid", $"nid", $"hamming")
-    rerankAndGrade(s, e, shortlist)
+      .join(broadcast(queryCodes(codes)), Seq("qid"))))
   }
 
   /** Full-probe flavor — see [[q262AnnBinaryIvf]]: provably q261's
@@ -1244,8 +1188,6 @@ object Similarity {
     q262AnnBinaryIvf(s, dir, nCells = 8, nProbe = 8)
 
   val q261AnnBinaryHammingSql: String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
     def half(h: Int) =
       s"""CAST(list_sum(list_transform(range(0, 32),
          |      i -> CASE WHEN embedding[${32 * h} + i + 1] > 0

@@ -60,8 +60,8 @@ final class CdcScanBuilder(path: String) extends ScanBuilder with SupportsPushDo
   private var pushed: Array[Filter] = Array.empty
 
   private def pushable(f: Filter): Boolean = f match {
-    case EqualTo(a, _) => Set("op", "tableName", "tableNamespace")(a)
-    case In(a, _)      => Set("op", "tableName", "tableNamespace")(a)
+    case EqualTo(a, _) => CdcScanBuilder.Pushable(a)
+    case In(a, _)      => CdcScanBuilder.Pushable(a)
     case _             => false
   }
 
@@ -72,6 +72,25 @@ final class CdcScanBuilder(path: String) extends ScanBuilder with SupportsPushDo
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def build(): Scan = new CdcScan(path, pushed)
+}
+
+object CdcScanBuilder {
+  private val Pushable = Set("op", "tableName", "tableNamespace")
+
+  /** The pushed filters applied to one change event's op and table,
+    * before its row is materialized — the one predicate both partition
+    * readers use.
+    */
+  private[cdc] def passes(filters: Array[Filter], op: String, tableName: String,
+      tableNamespace: String): Boolean = filters.forall {
+    case EqualTo("op", v)             => v == op
+    case In("op", vs)                 => vs.contains(op)
+    case EqualTo("tableName", v)      => v == tableName
+    case In("tableName", vs)          => vs.contains(tableName)
+    case EqualTo("tableNamespace", v) => v == tableNamespace
+    case In("tableNamespace", vs)     => vs.contains(tableNamespace)
+    case _                            => true
+  }
 }
 
 final class CdcScan(path: String, filters: Array[Filter]) extends Scan {
@@ -215,19 +234,12 @@ final class PgOutputPartitionReader(file: String, filters: Array[Filter])
   // Stream Commit) — drain released events before reading the next frame
   private val released = scala.collection.mutable.Queue.empty[PgOutput.RowEvent]
 
-  private def passes(field: String, value: String): Boolean = filters.forall {
-    case EqualTo(a, v) if a == field => v == value
-    case In(a, vs) if a == field     => vs.contains(value)
-    case _                           => true
-  }
-
   override def next(): Boolean = {
     while (released.nonEmpty || frames.hasNext) {
       if (released.isEmpty) released ++= session.feed(frames.next())
       if (released.nonEmpty) {
         val ev = released.dequeue()
-        if (passes("op", ev.op) && passes("tableName", ev.tableName) &&
-            passes("tableNamespace", ev.tableNamespace)) {
+        if (CdcScanBuilder.passes(filters, ev.op, ev.tableName, ev.tableNamespace)) {
           current = InternalRow(
             ev.eventTimeMicros,
             WireJson.utf8(ev.tableNamespace), WireJson.utf8(ev.tableName),
@@ -258,12 +270,6 @@ final class CdcPartitionReader(file: String, filters: Array[Filter])
     Files.newBufferedReader(new File(file).toPath, StandardCharsets.UTF_8)
   private var current: InternalRow = _
 
-  private def passes(field: String, value: String): Boolean = filters.forall {
-    case EqualTo(a, v) if a == field => v == value
-    case In(a, vs) if a == field     => vs.contains(value)
-    case _                           => true
-  }
-
   override def next(): Boolean = {
     var line = reader.readLine()
     while (line != null) {
@@ -272,7 +278,7 @@ final class CdcPartitionReader(file: String, filters: Array[Filter])
         val op = node.path("op").asText(null)
         val table = node.path("tableName").asText(null)
         val ns = node.path("tableNamespace").asText(null)
-        if (passes("op", op) && passes("tableName", table) && passes("tableNamespace", ns)) {
+        if (CdcScanBuilder.passes(filters, op, table, ns)) {
           current = InternalRow(
             WireJson.instantMicros(node.path("eventTime").asText(null)),
             WireJson.utf8(ns), WireJson.utf8(table),

@@ -209,6 +209,15 @@ object CdcPipeline {
       .option("checkpointLocation", cfg.checkpointDir)
       .option("path", outDir)
 
+  /** Fail on a sink name that is none of kafka, parquet or replica —
+    * loudly, like an unknown `source.format`: a typo'd name must not
+    * fall through to the broker.
+    */
+  private[graft] def requireKnownSink(sink: String): Unit =
+    if (!Seq("kafka", "parquet", "replica").contains(sink))
+      throw new IllegalArgumentException(
+        s"unknown sink '$sink' (expected kafka | parquet | replica)")
+
   /** Wire the full pipeline to a parquet sink and start it. */
   def startToParquet(spark: SparkSession, cfg: ConnectorConfig, outDir: String,
       probe: Option[PipelineProbe] = None): StreamingQuery =
@@ -280,6 +289,7 @@ object CdcPipeline {
       spark: SparkSession, cfg: ConnectorConfig, sink: String, outDir: String,
       registry: Option[MetricsRegistry] = None,
       probe: Option[PipelineProbe] = None): StreamingQuery = {
+    requireKnownSink(sink)
     val snap = snapshotEventStream(spark, cfg).getOrElse(
       throw new IllegalArgumentException("snapshot mode requires snapshot.tables"))
     val ckpt = s"${cfg.checkpointDir}/snapshot"
@@ -338,17 +348,9 @@ object CdcPipeline {
     // the snapshot race is the throughput-critical path: same fused
     // probe as the CDC stream
     val records = defaultTransform(snap, cfg, probe)
-    val writer = sink match {
-      case "parquet" =>
-        records.writeStream.format("parquet")
-          .option("checkpointLocation", ckpt).option("path", outDir)
-      case _ =>
-        cfg.kafka.sinkOptions.foldLeft(
-          records.writeStream.format("kafka").option("checkpointLocation", ckpt)) {
-          case (w, (k, v)) => w.option(k, v)
-        }
-    }
-    val q = writer.trigger(Trigger.AvailableNow()).start()
+    val writer =
+      if (sink == "parquet") parquetSink(records, cfg, outDir) else kafkaSink(records, cfg)
+    val q = writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
     onStart(q)
     q.awaitTermination() // bounded: returns when the table scan is drained
     q
